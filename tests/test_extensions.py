@@ -202,6 +202,25 @@ def test_connected_components_chain_and_singletons(spark):
     assert got == {2: 2, 5: 2, 7: 2, 9: 2, 11: 11, 20: 20, 30: 20}
 
 
+def test_connected_components_keeps_caller_job_description(spark):
+    """The CC rounds label their own jobs, then hand the caller's label
+    back: jobs the caller runs afterwards must not lose it."""
+    from timeseries_spark.extensions.dedup import connected_components
+
+    sc = spark.sparkContext
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+    docs = spark.createDataFrame([(i,) for i in (1, 2, 3, 4)], "doc_id long")
+    sc.setJobDescription("outer: caller phase")
+    try:
+        comps = connected_components(pairs, docs)
+        assert sc.getLocalProperty("spark.job.description") == (
+            "outer: caller phase"
+        )
+        assert comps.count() == 4
+    finally:
+        sc.setJobDescription(None)
+
+
 def test_connected_components_adversarial_huge_ids(spark):
     """Convergence detection must survive doc ids near 2^62: a bigint
     label sum over these rows exceeds 2^63 (ANSI overflow error, or a

@@ -1,8 +1,7 @@
 """Persist-lifecycle lint (VERDICT r15 item 1).
 
 Every ``.persist()`` in the package must be lifecycle-managed: either
-it IS the registry (``caching.register_cache``), a scope-bracketed
-context manager (``sources/io.py cached()``), or a loop-local cache
+it IS the registry (``caching.register_cache``), or a loop-local cache
 the operator itself unpersists in a ``finally`` once its eager
 checkpoint discipline makes the block dead weight (connected
 components' edge relation, label propagation's edge relation). Any
@@ -13,8 +12,8 @@ route through ``register_cache(df, family)`` instead (classifier /
 text / graph / behavior were enrolled this round).
 
 The lint walks the package AST, so a new bare ``.persist()`` anywhere
-fails the build until it is either bracketed, loop-unpersisted (and
-whitelisted here WITH the justification), or family-registered.
+fails the build until it is either loop-unpersisted (and whitelisted
+here WITH the justification) or family-registered.
 """
 
 from __future__ import annotations
@@ -30,8 +29,6 @@ PKG_ROOT = os.path.join(os.path.dirname(__file__), "..", "timeseries_spark")
 PERSIST_WHITELIST = {
     # the registry itself: every registered cache goes through here
     ("extensions/caching.py", "register_cache"),
-    # scope-bracketed: a context manager that unpersists on exit
-    ("sources/io.py", "cached"),
     # loop-local: labels are EAGER localCheckpoints, so the edge cache
     # is unpersisted in the operator's own `finally` before return
     ("extensions/dedup.py", "connected_components"),
@@ -73,9 +70,9 @@ def test_every_package_persist_is_lifecycle_managed():
     rogue = sites - PERSIST_WHITELIST
     assert not rogue, (
         f"bare .persist() outside the lifecycle whitelist: {sorted(rogue)} "
-        "— route it through caching.register_cache(df, family), bracket "
-        "it with sources.io.cached(), or (if loop-unpersisted in a "
-        "finally) whitelist it here with the justification"
+        "— route it through caching.register_cache(df, family), or (if "
+        "loop-unpersisted in a finally) whitelist it here with the "
+        "justification"
     )
     # the whitelist must not rot
     stale = PERSIST_WHITELIST - sites

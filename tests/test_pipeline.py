@@ -174,7 +174,9 @@ def test_prepared_corpus_persists_partitioned(spark, tmp_path):
 def test_point_query_rows_render_end_to_end(staged, disease, spark, tmp_path):
     """The reference's full presentation path on REAL pipeline output:
     point_query rows -> zero-dep raster -> decoded back by the repo's
-    own codec with the expected series/year grid."""
+    own codec with the expected series/year grid. The undated
+    (NULL-year) bucket point_query returns has no place on the year
+    axis: the renderer skips it, and refuses input with no dated row."""
     from timeseries_spark.extensions.multimodal import _sniff_and_decode
     from timeseries_spark.plans.plotting import render_timeline_ppm
 
@@ -186,10 +188,14 @@ def test_point_query_rows_render_end_to_end(staged, disease, spark, tmp_path):
         "T1",
         disease=disease,
     ).collect()
-    rows = [r for r in rows if r["year"] is not None]
+    undated = [r for r in rows if r["year"] is None]
+    dated = [r for r in rows if r["year"] is not None]
+    assert undated, "fixture must exercise the undated bucket"
     payload = render_timeline_ppm(rows, cell=8, gutter=1)
     d = _sniff_and_decode(payload)
-    n_series = len({r["datasourceId"] for r in rows})
-    years = {r["year"] for r in rows}
+    n_series = len({r["datasourceId"] for r in dated})
+    years = {r["year"] for r in dated}
     assert d["height"] == 1 + n_series * 9
     assert d["width"] == 1 + (max(years) - min(years) + 1) * 9
+    with pytest.raises(ValueError, match="no rows"):
+        render_timeline_ppm(undated)

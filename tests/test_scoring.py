@@ -84,15 +84,3 @@ def test_score_monotone_nondecreasing(scored):
         .count()
     )
     assert bad == 0
-
-
-def test_weighted_overall_grain(evidence_dated, cfg):
-    """Overall score = weighted evidence at (d,t) grain (timeseries.py:689)."""
-    weights = {"src_a": 1.0, "src_b": 0.5}
-    scored = association_score(
-        evidence_dated, cfg, ("diseaseId", "targetId"), weights=weights
-    )
-    series = rows_for(scored, diseaseId="D1", targetId="T1")
-    # 2004 cumulative pool: [0.891, 0.0576 (src_a, 2003), 0.5*0.5 (src_b)]
-    expected = (0.891 / 1 + 0.25 / 4 + 0.0576 / 9) / 1.64
-    assert series[2004]["score"] == pytest.approx(expected)

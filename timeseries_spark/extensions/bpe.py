@@ -10,7 +10,7 @@ to text is the tokenizer.
 Scale shape — the part that matters at 100 TB: the corpus is scanned
 ONCE to build the (token, count) vocabulary; every merge round after
 that runs at VOCABULARY grain (pair counting shuffles |vocab|·avg_len
-rows with map-side partial aggregation, the winning pair is a one-row
+rows with map-side partial aggregation, the winning pairs are a bounded
 TakeOrdered collect back — bounded metadata, never corpus data — and
 the merge rewrite is a per-row literal string replace folded lazily
 into the next round's plan). Rounds follow the ``kmeans_fit`` /
@@ -81,8 +81,9 @@ def _pair_counts(words: DataFrame) -> DataFrame:
 def induce_bpe(
     docs: DataFrame, n_merges: int, text_col: str = "text"
 ) -> tuple[DataFrame, DataFrame]:
-    """Train ``n_merges`` BPE merges on the corpus. Returns
-    ``(merges, words)``:
+    """Train ``n_merges`` BPE merges on the corpus, one merge per round
+    (sequential greedy BPE: ``induce_bpe_batched`` with ``batch_max=1``).
+    Returns ``(merges, words)``:
 
     - merges: (step, pair_left, pair_right, merged, pair_count) — the
       ordered merge table, the tokenizer artifact;
@@ -93,54 +94,7 @@ def induce_bpe(
     of adjacent pairs — single-character words can exhaust a toy corpus
     before ``n_merges`` rounds.
     """
-    if n_merges < 1:
-        raise ValueError(f"n_merges must be >= 1, got {n_merges}")
-    words = _vocab(docs, text_col).localCheckpoint(eager=True)
-    # Round-16 job-count rewrite (guide §1.2 step 1: the r16 profile
-    # charged bpe_merges 45 driver jobs for 0.7 task-seconds — pure
-    # orchestration). ONE job per round: the winning pair comes back as
-    # a bounded 1-row collect (the same metadata-only discipline as
-    # select_batch's batch_max+1 window), the rewrite folds into the
-    # NEXT round's plan as a lazy literal replace instead of its own
-    # crossJoin + checkpoint job, and the merge table materializes once
-    # from driver literals at the end (exactly as induce_bpe_batched
-    # always has). Checkpointing every _CKPT_EVERY rounds keeps the
-    # replace chain bounded, so per-round analysis and recompute stay
-    # O(_CKPT_EVERY) while intermediate materializations drop from
-    # n_merges to n_merges/_CKPT_EVERY.
-    _CKPT_EVERY = 8
-    merge_lits: list[tuple] = []
-    since_ckpt = 0
-    for step in range(1, n_merges + 1):
-        top = (
-            _pair_counts(words)
-            .orderBy(F.desc("total"), "a", "b")
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        r = top[0]
-        merge_lits.append((step, r["a"], r["b"], r["a"] + r["b"], r["total"]))
-        words = words.withColumn(
-            "s",
-            F.replace(
-                F.col("s"),
-                F.lit(f"[{r['a']}][{r['b']}]"),
-                F.lit(f"[{r['a']}{r['b']}]"),
-            ),
-        ).select("token", "cnt", "s")
-        since_ckpt += 1
-        if since_ckpt >= _CKPT_EVERY and step < n_merges:
-            words = words.localCheckpoint(eager=True)
-            since_ckpt = 0
-    merges = inline_rows(
-        docs.sparkSession,
-        merge_lits,
-        "step int, pair_left string, pair_right string, "
-        "merged string, pair_count bigint",
-    )
-    return merges, words
+    return induce_bpe_batched(docs, n_merges, text_col, batch_max=1)
 
 
 def segment_topk(words: DataFrame, k: int = 50) -> DataFrame:
@@ -353,9 +307,10 @@ def induce_bpe_batched(
     round merges up to ``batch_max`` pairwise-disjoint pairs at once
     (see ``_disjoint_prefix`` for the proof sketch), so a realistic
     30k-merge vocabulary needs hundreds of Spark rounds instead of
-    30k sequential jobs. Output is identical to ``induce_bpe`` —
-    same merge table (steps, counts, order), same final segmentation —
-    which is what lets this share the sequential oracle.
+    30k sequential jobs. Output is identical to sequential greedy BPE
+    (``batch_max=1``, i.e. ``induce_bpe``) — same merge table (steps,
+    counts, order), same final segmentation — which is what lets this
+    share the sequential oracle.
 
     Driver boundary: ONE bounded collect of <= batch_max + 1 tiny
     (a, b, total) rows per round — the same metadata-only discipline as
@@ -368,12 +323,15 @@ def induce_bpe_batched(
         raise ValueError(f"batch_max must be >= 1, got {batch_max}")
     spark = docs.sparkSession
     words = _vocab(docs, text_col).localCheckpoint(eager=True)
-    # Same round-16 job-count discipline as induce_bpe: the per-round
-    # rewrite stays a LAZY literal-replace chain evaluated by the next
-    # round's selection job, with a checkpoint only every _CKPT_EVERY
-    # rounds (chain bounded at batch_max * _CKPT_EVERY replaces) — one
-    # driver job per round instead of two.
-    _CKPT_EVERY = 4
+    # Round-16 job-count discipline (the r16 profile charged bpe_merges
+    # 45 driver jobs for 0.7 task-seconds — pure orchestration): ONE job
+    # per round. The batch comes back as a bounded collect, the rewrite
+    # folds into the NEXT round's plan as a lazy literal-replace chain
+    # instead of its own crossJoin + checkpoint job, and the merge table
+    # materializes once from driver literals at the end. A checkpoint
+    # every _CKPT_REPLACES chained replaces keeps per-round analysis and
+    # recompute bounded whatever the batch sizes.
+    _CKPT_REPLACES = 64
     merge_lits: list[tuple] = []
     since_ckpt = 0
     while len(merge_lits) < n_merges:
@@ -394,8 +352,8 @@ def induce_bpe_batched(
                 F.lit(f"[{r['a']}{r['b']}]"),
             )
         words = words.withColumn("s", s).select("token", "cnt", "s")
-        since_ckpt += 1
-        if since_ckpt >= _CKPT_EVERY and len(merge_lits) < n_merges:
+        since_ckpt += len(batch)
+        if since_ckpt >= _CKPT_REPLACES and len(merge_lits) < n_merges:
             words = words.localCheckpoint(eager=True)
             since_ckpt = 0
     merges = inline_rows(

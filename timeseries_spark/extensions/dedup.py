@@ -675,9 +675,12 @@ def connected_components(
     # both directions from a single traversal — the identical directed
     # edge SET (same distinct), with the pair kernel run exactly once.
     # job descriptions label each materialization for the Spark UI and
-    # the event-log profiler (tools/profile_semantic.py); the first one
-    # also executes the upstream pair subtree (block cosine + edge build)
+    # the per-phase profiler (tools/profiler.py); the first one also
+    # executes the upstream pair subtree (block cosine + edge build).
+    # The caller's own label is restored on exit, so its later jobs
+    # keep it.
     sc = pairs.sparkSession.sparkContext
+    outer_label = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription("cc: seed labels (runs pair subtree)")
     # the seed ABSORBS round 0's neighbor-min hop: instead of seeding
     # label = vid (one distinct shuffle) and spending a full loop round
@@ -808,7 +811,7 @@ def connected_components(
             ).select(id_col, F.col(id_col).alias("component"))
             return paired.unionByName(singletons)
         finally:
-            sc.setJobDescription(None)
+            sc.setJobDescription(outer_label)
             edges.unpersist()
 
 
@@ -889,11 +892,14 @@ def semantic_dedup(
         # the in-plan path it replaces (kmeans_assign checkpoints its
         # assignments as a side effect of the Lloyd loop).
         sc = vectors.sparkSession.sparkContext
+        outer_label = sc.getLocalProperty("spark.job.description")
         sc.setJobDescription("semantic: staged-centroid assign")
-        clusters = assign_to_centroids(
-            vectors, centroids, id_col=id_col, vec_col=vec_col
-        ).localCheckpoint(eager=True)
-        sc.setJobDescription(None)
+        try:
+            clusters = assign_to_centroids(
+                vectors, centroids, id_col=id_col, vec_col=vec_col
+            ).localCheckpoint(eager=True)
+        finally:
+            sc.setJobDescription(outer_label)
     else:
         if n_clusters == "auto":
             # corpus-sized blocker: one count() action (a distributed

@@ -29,7 +29,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from timeseries_spark.config import EngineConfig
-from timeseries_spark.functions.inline import inline_rows
 from timeseries_spark.functions.arrays import harmonic_sum, let, top_k_desc
 
 
@@ -39,14 +38,9 @@ def association_score(
     key_cols: Sequence[str] = ("diseaseId", "targetId", "datasourceId"),
     year_col: str = "year",
     score_col: str = "score",
-    weights: dict[str, float] | None = None,
-    weight_key: str = "datasourceId",
 ) -> DataFrame:
-    """Dense yearly harmonic scores per key group.
-
-    ``weights`` (overall grain, timeseries.py:689-691): evidence scores are
-    scaled by their datasource weight before aggregation; the weight map is
-    tiny (23 sources) and joined broadcast.
+    """Dense yearly harmonic scores per key group. The weighted overall
+    grain is ``overall_score`` over this function's per-source output.
 
     Output columns: ``*key_cols, year (int, NULL = undated bucket), score``.
     """
@@ -57,18 +51,6 @@ def association_score(
         year_col,
         F.coalesce(F.col(year_col), F.lit(cfg.sentinel_year)).cast("int"),
     )
-    if weights is not None:
-        wdf = inline_rows(
-            spark,
-            [(k, float(v)) for k, v in weights.items()],
-            f"{weight_key} string, weight double",
-        )
-        # unknown sources default to weight 1.0 (the reference's registry
-        # always covers its sources; NULL-ing their scores would silently
-        # drop evidence)
-        data = data.join(F.broadcast(wdf), weight_key, "left").withColumn(
-            score_col, F.col(score_col) * F.coalesce(F.col("weight"), F.lit(1.0))
-        )
 
     # No input fan-out here, deliberately (round-10 lesson): a
     # stats-guarded repartition was tried and REVERTED — plan-stats

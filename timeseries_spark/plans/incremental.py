@@ -45,7 +45,6 @@ def incremental_association(
     new_evidence: DataFrame,
     cfg: EngineConfig,
     key_cols: Sequence[str] = ("diseaseId", "targetId", "datasourceId"),
-    weights: dict[str, float] | None = None,
 ) -> DataFrame:
     """Merge ``new_evidence`` into ``existing_assoc`` (score + novelty).
 
@@ -56,7 +55,7 @@ def incremental_association(
     touched = affected_keys(new_evidence, keys)
 
     scoped = all_evidence.join(F.broadcast(touched), keys, "left_semi")
-    scores = association_score(scoped, cfg, keys, weights=weights)
+    scores = association_score(scoped, cfg, keys)
     fresh = add_novelty(scores, cfg, keys)
 
     kept = existing_assoc.join(F.broadcast(touched), keys, "left_anti")

@@ -11,8 +11,9 @@ public API, SURVEY.md §4):
 
 Unlike the reference, stages never read-modify-overwrite the same path
 (timeseries.py:632-634 risk): each output is written once, versioned by the
-caller's path choice. ``persist()`` is scoped around the double-consumed
-novelty input exactly where the reference does (timeseries.py:766-768).
+caller's path choice. Nothing is persisted: the reference persists the
+novelty input because it reads it twice (timeseries.py:766-768), while
+``add_novelty`` reads it once.
 """
 
 from __future__ import annotations
@@ -26,7 +27,7 @@ from timeseries_spark.config import EngineConfig
 from timeseries_spark.operators.novelty import add_novelty
 from timeseries_spark.operators.ontology import expand_ontology
 from timeseries_spark.operators.scoring import association_score, overall_score
-from timeseries_spark.sources.io import cached, table_exists, write_parquet
+from timeseries_spark.sources.io import table_exists, write_parquet
 
 DS_KEYS = ("diseaseId", "targetId", "datasourceId")
 OVERALL_KEYS = ("diseaseId", "targetId")
@@ -86,10 +87,10 @@ class TimeseriesPipeline:
             OVERALL_KEYS,
             weights=weights,
         )
-        # novelty consumes scores twice (timeseries.py:766-768)
-        with cached(scores):
-            out = add_novelty(scores, self.cfg, OVERALL_KEYS)
-            return self._sink(out, stage)
+        # no persist: the reference consumes scores twice here
+        # (timeseries.py:766-768), add_novelty reads its input once
+        out = add_novelty(scores, self.cfg, OVERALL_KEYS)
+        return self._sink(out, stage)
 
     def run(
         self, evidence_dated: DataFrame, disease: DataFrame

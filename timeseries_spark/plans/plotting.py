@@ -45,22 +45,26 @@ def render_timeline_ppm(
     """Rasterize point-query rows into binary PPM (P6) bytes.
 
     ``rows``: iterables/Rows with ``datasourceId``, ``year``, ``score``,
-    ``novelty`` fields (the point_query output schema). Returns the
-    complete image file; decode it with
+    ``novelty`` fields (the point_query output schema). Undated rows
+    (NULL year) have no place on the year axis and are skipped. Returns
+    the complete image file; decode it with
     ``extensions.multimodal._decode_ppm`` or any image viewer."""
     data = []
     for r in rows:
         get = r.__getitem__ if hasattr(r, "__getitem__") else None
+        year = r["year"] if get else r.year
+        if year is None:
+            continue
         data.append(
             (
                 r["datasourceId"] if get else r.datasourceId,
-                int(r["year"] if get else r.year),
+                int(year),
                 float((r["score"] if get else r.score) or 0.0),
                 float((r["novelty"] if get else r.novelty) or 0.0),
             )
         )
     if not data:
-        raise ValueError("render_timeline_ppm: no rows to render")
+        raise ValueError("render_timeline_ppm: no rows with a year to render")
     series = sorted(
         {d[0] for d in data}, key=lambda s: (s != "overall", s)
     )

@@ -9,8 +9,6 @@ goes through Hadoop's FileSystem API, which resolves any configured scheme
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -148,19 +146,6 @@ def register_views(
         spark.read.parquet(f"{sf_dir}/{name}.parquet").createOrReplaceTempView(
             name
         )
-
-
-@contextmanager
-def cached(df: DataFrame):
-    """Scoped persist (SURVEY.md §4): the reference brackets double-
-    consumed inputs with persist()/unpersist() by hand
-    (timeseries.py:766-768, 832); the context manager makes the scope
-    explicit and exception-safe."""
-    df.persist()
-    try:
-        yield df
-    finally:
-        df.unpersist()
 
 
 def read_orc(

@@ -29,12 +29,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from skew_check import (  # noqa: E402
-    EVT_DIR,
-    mark,
-    replicate_orders,
-    stage_stats,
-)
+from profiler import mark, stage_stats  # noqa: E402
+from skew_check import replicate_orders  # noqa: E402
 
 
 def main() -> None:
@@ -49,16 +45,7 @@ def main() -> None:
     out_json = (
         sys.argv[3] if len(sys.argv) > 3 else "experiments/ADVISORY_r10.json"
     )
-    os.makedirs(EVT_DIR, exist_ok=True)
-    spark = get_spark(
-        "advisory_check",
-        extra_conf={
-            "spark.eventLog.enabled": "true",
-            "spark.eventLog.dir": EVT_DIR,
-            "spark.eventLog.rolling.enabled": "false",
-            "spark.eventLog.compress": "false",
-        },
-    )
+    spark = get_spark("advisory_check")
 
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_orderstatus", "o_orderdate",

@@ -7,11 +7,11 @@ space scaling alongside the data (replica-suffixed priorities) and the
 fixtures checkpointed at cluster width (the round-10 lesson: a 1-file
 replication measures its own serialized scan, not the engine).
 
-Evidence captured per tier: median-of-3 warm wall time and, for the
-100x tier, per-stage task-balance stats from the event log (max vs p50
-task time of the heaviest stages — a straggler reducer shows as
-max >> p50). Linear scaling predicts t(100x) ~ 4 * t(25x) on a fixed
-32-core box once the corpus is large enough to saturate it.
+Evidence captured per tier: median-of-3 warm wall time and per-stage
+task-balance stats from the Spark status store (max vs p50 task time of
+the heaviest stages — a straggler reducer shows as max >> p50). Linear
+scaling predicts t(100x) ~ 4 * t(25x) on a fixed 32-core box once the
+corpus is large enough to saturate it.
 
 Usage: python tools/flagship_scale100.py [sf_dir] [out_json]
 """
@@ -27,13 +27,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from skew_check import (  # noqa: E402
-    EVT_DIR,
-    mark,
-    replicate_orders,
-    stage_stats,
-    time_warm,
-)
+from profiler import mark, stage_stats  # noqa: E402
+from skew_check import replicate_orders, time_warm  # noqa: E402
 
 
 def main() -> None:
@@ -49,16 +44,7 @@ def main() -> None:
         if len(sys.argv) > 2
         else "experiments/FLAGSHIP100_r11.json"
     )
-    os.makedirs(EVT_DIR, exist_ok=True)
-    spark = get_spark(
-        "flagship_scale100",
-        extra_conf={
-            "spark.eventLog.enabled": "true",
-            "spark.eventLog.dir": EVT_DIR,
-            "spark.eventLog.rolling.enabled": "false",
-            "spark.eventLog.compress": "false",
-        },
-    )
+    spark = get_spark("flagship_scale100")
     width = spark.sparkContext.defaultParallelism
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey",

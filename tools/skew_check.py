@@ -26,9 +26,9 @@ disease-target pair; one boilerplate template across a scraped corpus):
   far above the cap) are nulled before signatures, so the hot docs
   hash on their unique shingles and the bucket never forms.
 
-Each run executes under an event-logging session; per-stage task
-distributions (max vs p50 task time of the heaviest stages) land in
-the JSON artifact so "no straggler reducer" is evidence, not prose.
+Per-stage task distributions (max vs p50 task time of the heaviest
+stages, from the Spark status store via tools/profiler.py) land in the
+JSON artifact so "no straggler reducer" is evidence, not prose.
 
 Usage: python tools/skew_check.py [sf_dir] [n_rep] [out_json]
 """
@@ -44,7 +44,7 @@ sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F  # noqa: E402
 
-EVT_DIR = "/tmp/spark-events-skew"
+from profiler import mark, stage_stats  # noqa: E402
 
 
 def time_warm(fn, reps: int = 3) -> float:
@@ -142,52 +142,6 @@ def zipf_head_docs(docsN):
     )
 
 
-def _parse_stages(spark) -> dict[int, list[float]]:
-    app_id = spark.sparkContext.applicationId
-    path = os.path.join(EVT_DIR, app_id + ".inprogress")
-    if not os.path.exists(path):
-        path = os.path.join(EVT_DIR, app_id)
-    stages: dict[int, list[float]] = {}
-    with open(path) as fh:
-        for line in fh:
-            if '"SparkListenerTaskEnd"' not in line:
-                continue
-            ev = json.loads(line)
-            info = ev.get("Task Info", {})
-            dur = (info.get("Finish Time", 0) - info.get("Launch Time", 0)) / 1e3
-            stages.setdefault(ev.get("Stage ID", -1), []).append(dur)
-    return stages
-
-
-def mark(spark) -> set[int]:
-    """Stage ids already in the log — pass to stage_stats to scope the
-    report to ONLY the work executed after this point."""
-    return set(_parse_stages(spark))
-
-
-def stage_stats(spark, since: set[int] | None = None, top_n: int = 5):
-    """Per-stage task counts and max/p50 task times for the ``top_n``
-    stages (by total task time) executed since ``since``. A balanced
-    stage has max_s close to p50_s; a straggler reducer shows up as
-    max_s >> p50_s with wall time pinned to max_s."""
-    rows = []
-    for sid, ts in _parse_stages(spark).items():
-        if since and sid in since:
-            continue
-        ts.sort()
-        rows.append(
-            {
-                "stage": sid,
-                "tasks": len(ts),
-                "total_s": round(sum(ts), 2),
-                "max_s": round(ts[-1], 3),
-                "p50_s": round(ts[len(ts) // 2], 3),
-            }
-        )
-    rows.sort(key=lambda r: -r["total_s"])
-    return rows[:top_n]
-
-
 def main() -> None:
     from timeseries_spark.extensions.dedup import lsh_candidates
     from timeseries_spark.operators.novelty import add_novelty
@@ -199,18 +153,7 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     n_rep = int(sys.argv[2]) if len(sys.argv) > 2 else 5
     out_json = sys.argv[3] if len(sys.argv) > 3 else "experiments/SKEW_r10.json"
-    os.makedirs(EVT_DIR, exist_ok=True)
-    spark = get_spark(
-        "skew_check",
-        extra_conf={
-            "spark.eventLog.enabled": "true",
-            "spark.eventLog.dir": EVT_DIR,
-            # plain single-file JSON-lines log (Spark 4 defaults to a
-            # zstd-compressed rolling dir) so _parse_stages can stream it
-            "spark.eventLog.rolling.enabled": "false",
-            "spark.eventLog.compress": "false",
-        },
-    )
+    spark = get_spark("skew_check")
     out: dict = {"sf": sf_dir, "n_rep": n_rep}
 
     # ---------------- flagship scoring under a Zipf head ----------------
