@@ -2,13 +2,16 @@
 
 from __future__ import annotations
 
+import functools
 import os
+from typing import NamedTuple
 
 import pytest
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from timeseries_spark.config import EngineConfig
 from timeseries_spark import schemas
+from timeseries_spark.queries import all_queries
 from timeseries_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -66,3 +69,74 @@ def sf_dir() -> str:
 
 def load(spark, sf_dir: str, name: str):
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def explain(df: DataFrame) -> str:
+    """``df``'s formatted-mode explain string. Every node appears twice
+    in it (tree line + detail header), so raw substring counts of a node
+    name are twice the node count."""
+    return df.sparkSession._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def shuffles(p: str) -> int:
+    """Shuffle exchanges (broadcasts excluded) in a formatted plan."""
+    return (p.count("Exchange") - p.count("BroadcastExchange")) // 2
+
+
+def partitionless_windows(df: DataFrame) -> list[str]:
+    """Names of partition-less window-family physical nodes in ``df``'s
+    pre-AQE physical plan (WindowExec / WindowGroupLimitExec /
+    WindowInPandasExec with an empty partitionSpec). Such a node is a
+    SinglePartition window: its whole input funnels through ONE task."""
+    hits: list[str] = []
+
+    def walk(node) -> None:
+        if node.getClass().getSimpleName() in (
+            "WindowExec",
+            "WindowGroupLimitExec",
+            "WindowInPandasExec",
+        ):
+            try:
+                empty = node.partitionSpec().isEmpty()
+            except Exception:  # noqa: BLE001 - node without the method
+                empty = False
+            if empty:
+                hits.append(node.nodeName())
+        children = node.children()
+        for i in range(children.length()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().sparkPlan())
+    return hits
+
+
+class RegistryPlan(NamedTuple):
+    explain: str  # formatted explain string
+    windows: int  # partition-less window nodes in the pre-AQE plan
+
+
+@pytest.fixture(scope="session")
+def registry_plan(spark):
+    """``name -> RegistryPlan`` for a registered query at ``SF_DIR``.
+    Each query is built once per session, the first time it is asked
+    for, and only the two facts the plan audits read are kept. Built
+    COLD: the cache is cleared first, so no other query's persisted
+    relation (with its lineage) is spliced into the plan text and the
+    facts do not depend on test order."""
+    queries = all_queries()
+
+    @functools.cache
+    def get(name: str) -> RegistryPlan:
+        spark.catalog.clearCache()
+        df = queries[name](spark, SF_DIR)
+        return RegistryPlan(explain(df), len(partitionless_windows(df)))
+
+    return get
+
+
+@pytest.fixture(scope="session")
+def plan(registry_plan):
+    """``name -> formatted explain string`` of a registered query."""
+    return lambda name: registry_plan(name).explain

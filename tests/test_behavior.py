@@ -7,16 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from timeseries_spark.operators.behavior import funnel_counts, retention_cohorts
-from timeseries_spark.queries import all_queries
-
-SF = "/root/testdata/sf0.001"
-
-
-def _plan(spark, name):
-    df = all_queries()[name](spark, SF)
-    return spark._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
 
 
 def test_funnel_strict_order_semantics(spark):
@@ -78,7 +68,7 @@ def test_retention_triangle(spark):
         retention_cohorts(df, "user_id", F.col("day"), max_offset=-1)
 
 
-def test_behavior_plans_keyed(spark):
+def test_behavior_plans_keyed(plan):
     for name in ("funnel_view_click_purchase", "retention_cohorts"):
-        p = _plan(spark, name)
+        p = plan(name)
         assert "CartesianProduct" not in p, name

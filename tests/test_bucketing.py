@@ -6,6 +6,7 @@ test can't pass by broadcasting."""
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import explain, shuffles
 from timeseries_spark.sources.io import write_bucketed
 
 SF = "/root/testdata/sf0.001"
@@ -26,12 +27,6 @@ def bucketed(spark):
     spark.sql("DROP TABLE IF EXISTS customer_b")
 
 
-def _plan(spark, df):
-    return spark._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
 def test_bucketed_join_has_no_shuffle(spark, bucketed):
     orders_b, customer_b = bucketed
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -40,12 +35,11 @@ def test_bucketed_join_has_no_shuffle(spark, bucketed):
         joined = orders_b.join(
             customer_b, orders_b.o_custkey == customer_b.c_custkey
         ).groupBy("c_mktsegment").count()
-        p = _plan(spark, joined)
+        p = explain(joined)
         # join itself: no Exchange before the SortMergeJoin inputs; the
         # only allowed exchange is the downstream groupBy's
         assert "SortMergeJoin" in p
-        n_shuffles = (p.count("Exchange") - p.count("BroadcastExchange")) // 2
-        assert n_shuffles <= 1  # groupBy only — zero for the join
+        assert shuffles(p) <= 1  # groupBy only — zero for the join
         # correctness unchanged vs the unbucketed plan
         plain = (
             spark.read.parquet(f"{SF}/orders.parquet")
@@ -67,5 +61,5 @@ def test_bucketed_groupby_has_no_shuffle(spark, bucketed):
     """Aggregation on the bucket key also elides its Exchange."""
     orders_b, _ = bucketed
     agg = orders_b.groupBy("o_custkey").agg(F.sum("o_totalprice").alias("s"))
-    p = _plan(spark, agg)
+    p = explain(agg)
     assert (p.count("Exchange") - p.count("BroadcastExchange")) == 0

@@ -7,9 +7,6 @@ from __future__ import annotations
 import pytest
 
 from timeseries_spark.extensions.classifier import logreg_fit, logreg_metrics
-from timeseries_spark.queries import all_queries
-
-SF = "/root/testdata/sf0.001"
 
 
 def _sep(spark):
@@ -47,13 +44,19 @@ def test_bad_iter_raises(spark):
         logreg_fit(_sep(spark), ["x"], "y", n_iter=0)
 
 
-def test_train_plan_broadcasts_weights(spark):
+@pytest.mark.parametrize("bad", ["a-b", "a b", "1x"])
+def test_non_identifier_feature_names_raise(spark, bad):
+    df = spark.createDataFrame([(1.0, 1.0)], f"y double, `{bad}` double")
+    with pytest.raises(ValueError, match=bad):
+        logreg_fit(df, [bad], "y")
+    with pytest.raises(ValueError, match=bad):
+        logreg_metrics(df, df, [bad], "y")
+
+
+def test_train_plan_broadcasts_weights(plan):
     """The weight vector must broadcast onto the corpus every round —
     never a shuffle of the features against a one-row table."""
-    df = all_queries()["logreg_quality_train"](spark, SF)
-    p = spark._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    p = plan("logreg_quality_train")
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" in p  # 1-row weights x corpus
     assert "SortMergeJoin" not in p

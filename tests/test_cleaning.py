@@ -6,14 +6,12 @@ from __future__ import annotations
 
 import pytest
 
+from tests.conftest import shuffles
 from timeseries_spark.extensions.cleaning import (
     dedup_tokens_in_doc,
     derive_stop_tokens,
     strip_stop_tokens,
 )
-from timeseries_spark.queries import all_queries
-
-SF = "/root/testdata/sf0.001"
 
 
 def _docs(spark):
@@ -64,23 +62,17 @@ def test_bad_ratio_raises(spark):
         derive_stop_tokens(_docs(spark), 0.0)
 
 
-def test_dedup_plan_is_shuffle_free(spark):
+def test_dedup_plan_is_shuffle_free(plan):
     """The rewrite is per-row array algebra: no Exchange at all."""
-    df = all_queries()["doc_token_dedup"](spark, SF)
-    p = spark._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-    assert (p.count("Exchange") - p.count("BroadcastExchange")) // 2 == 0
+    p = plan("doc_token_dedup")
+    assert shuffles(p) == 0
     assert "CartesianProduct" not in p
 
 
-def test_strip_plan_singlepartition_carries_only_stoplist(spark):
+def test_strip_plan_singlepartition_carries_only_stoplist(plan):
     """The only SinglePartition collapse is the ≤|vocab|-row stoplist;
     documents themselves never funnel through one task."""
-    df = all_queries()["strip_stop_tokens"](spark, SF)
-    p = spark._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    p = plan("strip_stop_tokens")
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p
     # formatted explain prints each node twice (tree + detail): exactly

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import explain
 from timeseries_spark.extensions.sampling import shard_stats, token_budget_mix
 
 
@@ -113,9 +114,7 @@ def test_semantic_decontaminate_plan_broadcasts_eval(spark):
     tr = spark.createDataFrame(
         [(10, [2.0, 0.0])], "vec_id bigint, embedding array<double>"
     )
-    p = spark._jvm.PythonSQLUtils.explainString(
-        semantic_decontaminate(tr, ev)._jdf.queryExecution(), "formatted"
-    )
+    p = explain(semantic_decontaminate(tr, ev))
     assert "BroadcastNestedLoopJoin" in p  # eval side broadcast
     assert "CartesianProduct" not in p
     # train side never shuffles except the final flagged-id aggregate

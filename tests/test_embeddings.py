@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import explain, shuffles
 from timeseries_spark.extensions.embeddings import (
     covariance_pairs,
     jl_sign,
@@ -27,14 +28,11 @@ def test_covariance_single_shuffle(spark):
     df = spark.createDataFrame(
         [(0, [1.0, 2.0, 3.0])], "vec_id bigint, embedding array<double>"
     )
-    p = spark._jvm.PythonSQLUtils.explainString(
-        covariance_pairs(df, dims=3)._jdf.queryExecution(), "formatted"
-    )
-    n_shuffles = (p.count("Exchange") - p.count("BroadcastExchange")) // 2
+    p = explain(covariance_pairs(df, dims=3))
     # ONE logical idx-grain aggregate exchange; it appears up to 3x in
     # the static plan (pair side + two broadcast dim-sum sides) and AQE
     # reuses it at runtime — what matters is no join shuffle at all
-    assert n_shuffles <= 3
+    assert shuffles(p) <= 3
     assert "SortMergeJoin" not in p and "CartesianProduct" not in p
 
 
@@ -44,9 +42,7 @@ def test_random_projection_is_shuffle_free(spark):
         "vec_id bigint, embedding array<double>",
     )
     out = random_projection(df, dims=8, out_dims=4)
-    p = spark._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "formatted"
-    )
+    p = explain(out)
     assert "Exchange" not in p
     (row,) = out.collect()
     assert len(row["proj"]) == 4

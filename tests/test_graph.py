@@ -64,11 +64,8 @@ def test_pagerank_mass_conserved_on_real_graph(spark):
     assert abs(total - 1.0) < 1e-4
 
 
-def test_pagerank_plan_no_cartesian(spark):
-    df = all_queries()["pagerank_parts_suppliers"](spark, SF)
-    p = spark._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+def test_pagerank_plan_no_cartesian(plan):
+    p = plan("pagerank_parts_suppliers")
     assert "CartesianProduct" not in p
 
 

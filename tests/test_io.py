@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tests.conftest import explain
 from timeseries_spark.operators.scaffold import shuffled_null_years
 from timeseries_spark.sources.io import read_csv, read_parquet, write_csv
 
@@ -191,9 +192,7 @@ def test_orc_roundtrip_and_pushdown(spark, tmp_path):
     pruned = read_orc(spark, path, columns=["id", "part"]).where(
         "part = 1 AND id > 3"
     )
-    plan = spark._jvm.PythonSQLUtils.explainString(
-        pruned._jdf.queryExecution(), "formatted"
-    )
+    plan = explain(pruned)
     assert "Scan orc" in plan
     assert "PushedFilters" in plan and "id" in plan.split("PushedFilters")[1][:120]
     assert "val" not in plan.split("ReadSchema")[1][:120]  # column pruned

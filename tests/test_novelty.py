@@ -3,6 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
+from timeseries_spark.config import EngineConfig
 from timeseries_spark.operators.novelty import add_novelty
 from timeseries_spark.operators.scoring import association_score
 
@@ -66,3 +67,12 @@ def test_undated_bucket_has_zero_or_positive_novelty(with_novelty):
     nulls = with_novelty.filter(F.col("year").isNull()).collect()
     assert len(nulls) == 4  # one per key group
     assert all(r["novelty"] is not None for r in nulls)
+
+
+@pytest.mark.parametrize("field", ["novelty_scale", "novelty_shift"])
+@pytest.mark.parametrize("value", [float("nan"), float("inf"), float("-inf")])
+def test_config_rejects_non_finite_novelty_params(field, value):
+    # both are spliced into the novelty SQL as `{x!r}D`: nanD / infD
+    # would only fail later, inside Spark's parser
+    with pytest.raises(ValueError, match=field):
+        EngineConfig(**{field: value})

@@ -7,28 +7,10 @@ Counting note: in formatted mode every node appears twice (tree line +
 detail header), so raw substring counts are divided by 2.
 """
 
-import pytest
-
+from tests.conftest import explain, shuffles
 from timeseries_spark.queries import all_queries
 
 SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def plan(spark):
-    q = all_queries()
-
-    def get(name: str) -> str:
-        df = q[name](spark, SF)
-        return spark._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-
-    return get
-
-
-def shuffles(p: str) -> int:
-    return (p.count("Exchange") - p.count("BroadcastExchange")) // 2
 
 
 def test_point_query_pushes_filter_and_prunes_columns(plan):
@@ -120,7 +102,7 @@ def test_python_boundary_only_in_multimodal(plan):
             assert py == 0, name
 
 
-def test_dedup_pipelines_avoid_all_pairs(plan, spark):
+def test_dedup_pipelines_avoid_all_pairs(plan):
     """Candidate generation must be index/bucket joins, never all-pairs:
     no cartesian, no nested-loop join on the document side.
 
@@ -128,11 +110,11 @@ def test_dedup_pipelines_avoid_all_pairs(plan, spark):
     subtree per alias, and since the parallelism guard ends each copy in
     an identical round-robin Exchange, AQE's ReusedExchange computes it
     once at runtime (the textual count is the upper bound, not the
-    executed count). Audit COLD: the round-13 multi-consumer persist()
-    points otherwise splice each warm InMemoryRelation's full lineage —
-    exchanges included — into the plan TEXT of whichever test runs
+    executed count). Audited COLD (the plan cache clears the cache
+    before each build): the round-13 multi-consumer persist() points
+    otherwise splice each warm InMemoryRelation's full lineage —
+    exchanges included — into the plan TEXT of whichever query is built
     second, making the count depend on suite order."""
-    spark.catalog.clearCache()
     budget = {
         "dedup_jaccard_pairs": 7,  # 3 aliases of the shingle subtree
         # sentinel routing references the signature aggregate twice
@@ -176,9 +158,7 @@ def test_semantic_dedup_pair_stage_no_all_pairs(spark):
     clusters = kmeans_assign(emb, k=4, max_iter=3)
     blocked = emb.join(clusters.select("vec_id", "cluster"), "vec_id")
     pairs = embedding_near_dup(blocked, threshold=0.30, block_col="cluster")
-    p = spark._jvm.PythonSQLUtils.explainString(
-        pairs._jdf.queryExecution(), "formatted"
-    )
+    p = explain(pairs)
     assert p.count("CartesianProduct") == 0
     assert p.count("BroadcastNestedLoopJoin") == 0
     assert "SinglePartition" not in p
@@ -199,9 +179,7 @@ def test_shuffled_null_model_is_bucket_parallel(spark):
         "o_custkey",
     )
     df = shuffled_null_years(ev)
-    p = spark._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    p = explain(df)
     assert "SinglePartition" not in p
     assert p.count("CartesianProduct") == 0
 
@@ -222,9 +200,7 @@ def test_kmeans_init_no_single_partition(spark):
         )
     )
     seed = pts.orderBy("vid").limit(4)
-    p = spark._jvm.PythonSQLUtils.explainString(
-        seed._jdf.queryExecution(), "formatted"
-    )
+    p = explain(seed)
     assert "TakeOrderedAndProject" in p
     assert "SinglePartition" not in p
 
@@ -247,9 +223,7 @@ def test_brute_force_topk_no_single_partition(spark):
         F.col("embedding").alias("query_vec"),
     )
     out = brute_force_topk(vecs, queries, k=5)
-    p = spark._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "formatted"
-    )
+    p = explain(out)
     assert "SinglePartition" not in p
     assert p.count("CartesianProduct") == 0
 
@@ -529,9 +503,7 @@ def test_pair_join_repartition_pin_survives_execution(spark):
     q = all_queries()
     df = q["dedup_embedding_cosine"](spark, SF)
     df.count()
-    p = spark._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    p = explain(df)
     assert "REPARTITION_BY_NUM" in p
 
 

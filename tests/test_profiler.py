@@ -4,12 +4,7 @@ descriptions and per-stage task-time balance."""
 
 from __future__ import annotations
 
-import os
-import sys
-
-sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-
-from profiler import job_rows, mark, stage_stats  # noqa: E402
+from tools.profiler import job_rows, mark, stage_stats
 
 
 def test_mark_window_reads_jobs_and_stages(spark):

@@ -70,19 +70,14 @@ def test_staged_table_layout_and_reuse(spark, tmp_path, monkeypatch):
     assert os.path.getmtime(os.path.join(path, "_SUCCESS")) == stamp
 
 
-def test_scoring_fold_plan_shape(spark):
+def test_scoring_fold_plan_shape(plan):
     """Round-10 rewrite pins (operators/scoring.py): the flagship scoring
     plan must have exactly ONE scan of the evidence table (the old
     scaffold split the aggregate into two non-reusable exchanges and
     re-scanned the corpus), NO Window node (the cumulation is a per-key
     ArrayAggregate fold), and the fold exchange pinned as
     REPARTITION_BY_NUM (AQE-exempt against byte-based coalescing)."""
-    from timeseries_spark.queries import all_queries
-
-    df = all_queries()["assoc_score_yearly"](spark, SF_DIR)
-    p = spark._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    p = plan("assoc_score_yearly")
     # formatted mode lists every node twice (tree + detail header), so
     # exactly one scan node means exactly two occurrences (// 2 would
     # also have accepted three)

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import os
 
+from tests.conftest import explain
 from timeseries_spark.extensions.dedup import auto_n_clusters
 
 SF = "/root/testdata/sf0.001"
@@ -151,12 +152,6 @@ def test_bpe_batched_equals_sequential_on_steal_corpus(spark):
     )
 
 
-def _plan(spark, df) -> str:
-    return spark._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
 def test_scaled_dedup_pair_stage_no_all_pairs(spark):
     # the auto-k blocker must keep the pinned-k pair stage's plan
     # shape: candidates meet only inside a cluster block (block-keyed
@@ -172,7 +167,7 @@ def test_scaled_dedup_pair_stage_no_all_pairs(spark):
     clusters = kmeans_assign(emb, k=k, max_iter=3)
     blocked = emb.join(clusters.select("vec_id", "cluster"), "vec_id")
     pairs = embedding_near_dup(blocked, threshold=0.30, block_col="cluster")
-    p = _plan(spark, pairs)
+    p = explain(pairs)
     assert p.count("CartesianProduct") == 0
     assert p.count("BroadcastNestedLoopJoin") == 0
     assert "SinglePartition" not in p
@@ -189,5 +184,5 @@ def test_postings_build_fans_out_small_scans(spark):
     docs = load(spark, SF, "documents")
     if docs.rdd.getNumPartitions() >= 32:
         return  # guard is a no-op on this box; nothing to pin
-    p = _plan(spark, build_postings(docs))
+    p = explain(build_postings(docs))
     assert "RoundRobinPartitioning" in p

@@ -21,12 +21,6 @@ from timeseries_spark.queries import load
 SF = "/root/testdata/sf0.001"
 
 
-def _plan(spark, df) -> str:
-    return spark._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
 def _shard_corpus(spark):
     docs = load(spark, SF, "documents")
     emb = load(spark, SF, "embeddings")

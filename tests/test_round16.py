@@ -13,6 +13,8 @@ from __future__ import annotations
 
 import gc
 
+import pytest
+
 from timeseries_spark.queries import load
 
 SF = "/root/testdata/sf0.001"
@@ -217,7 +219,8 @@ def test_cc_pair_subtree_executes_exactly_once(spark):
     # counts); the exactly-once assertion below is only valid without
     # speculation/retries, so pin it to the local master this suite
     # runs under (round-17 advice)
-    assert spark.sparkContext.master.startswith("local")
+    if not spark.sparkContext.master.startswith("local"):
+        pytest.skip("exactly-once accumulator count needs a local master")
     acc = spark.sparkContext.accumulator(0)
     base = spark.range(0, 500).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
@@ -360,7 +363,8 @@ def test_bipartite_edges_single_traversal(spark):
 
     # exactly-once accumulator pin: valid only without task retries /
     # speculation — local-master guarded (round-17 advice)
-    assert spark.sparkContext.master.startswith("local")
+    if not spark.sparkContext.master.startswith("local"):
+        pytest.skip("exactly-once accumulator count needs a local master")
     acc = spark.sparkContext.accumulator(0)
     base = spark.range(0, 300).select(
         (F.col("id") % 20).alias("p"), (F.col("id") % 7).alias("s")

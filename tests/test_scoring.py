@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from timeseries_spark.functions.arrays import harmonic_score
-from timeseries_spark.operators.scoring import association_score
+from timeseries_spark.operators.scoring import association_score, overall_score
 
 KEYS = ("diseaseId", "targetId", "datasourceId")
 
@@ -84,3 +84,29 @@ def test_score_monotone_nondecreasing(scored):
         .count()
     )
     assert bad == 0
+
+
+def test_overall_score_weights_known_sources_only(spark, cfg):
+    """Per-source scores are weighted by source; an unknown source and a
+    NULL source both keep weight 1.0, then the harmonic sum runs again
+    at (keys, year) grain."""
+    rows = [
+        ("D1", "T1", "src_a", 2003, 0.8),  # weight 0.5 -> 0.4
+        ("D1", "T1", "src_b", 2003, 0.1),  # weight 2.0 -> 0.2
+        ("D1", "T2", "src_unknown", 2003, 0.6),
+        ("D1", "T3", None, 2003, 0.3),
+    ]
+    per_source = spark.createDataFrame(
+        rows,
+        "diseaseId string, targetId string, datasourceId string,"
+        " year int, score double",
+    )
+    got = {
+        r["targetId"]: r["score"]
+        for r in overall_score(
+            per_source, cfg, weights={"src_a": 0.5, "src_b": 2.0}
+        ).collect()
+    }
+    assert got["T1"] == pytest.approx((0.4 / 1 + 0.2 / 4) / 1.64)
+    assert got["T2"] == pytest.approx(0.6 / 1.64)
+    assert got["T3"] == pytest.approx(0.3 / 1.64)

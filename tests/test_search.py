@@ -11,9 +11,6 @@ from timeseries_spark.extensions.search import (
     boolean_search,
     build_postings,
 )
-from timeseries_spark.queries import all_queries
-
-SF = "/root/testdata/sf0.001"
 
 
 def _mk_docs(spark):
@@ -68,13 +65,10 @@ def test_boolean_and_not(spark):
     assert none == {1}  # doc 3 has cat but also fish
 
 
-def test_bm25_plan_topk_and_broadcast(spark):
+def test_bm25_plan_topk_and_broadcast(plan):
     """Global top-k must be TakeOrderedAndProject (per-partition heaps),
     the query/stats sides broadcast, and nothing cartesian."""
-    df = all_queries()["search_bm25_topk"](spark, SF)
-    p = spark._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    p = plan("search_bm25_topk")
     assert "TakeOrderedAndProject" in p
     assert "CartesianProduct" not in p
     assert "BroadcastHashJoin" in p or "BroadcastNestedLoopJoin" in p

@@ -11,6 +11,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import explain
 from timeseries_spark.extensions.kmeans import (
     assign_to_centroids,
     kmeans_assign,
@@ -18,12 +19,6 @@ from timeseries_spark.extensions.kmeans import (
 )
 
 SF = "/root/testdata/sf0.001"
-
-
-def _plan(spark, df) -> str:
-    return spark._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
 
 
 @pytest.fixture()
@@ -83,7 +78,7 @@ def test_assign_plan_is_shuffle_free(spark, cloud, tmp_path):
     path = str(tmp_path / "cents")
     cents.write.parquet(path)
     assigned = assign_to_centroids(cloud, spark.read.parquet(path))
-    p = _plan(spark, assigned)
+    p = explain(assigned)
     assert "Window" not in p
     # no key shuffle of the corpus: the only shuffle Exchange is the
     # bounded k-row centroid fold (SinglePartition over k rows), and
@@ -108,7 +103,7 @@ def test_staged_probe_plan_has_no_lloyd_subtree(spark, tmp_path, monkeypatch):
         spark, emb, f"{SF}/embeddings.parquet", k=4, max_iter=3
     )
     probe = ivf_topk(emb, _queries_df(spark, SF), k=5, centroids=cents)
-    p = _plan(spark, probe)
+    p = explain(probe)
     assert "ExistingRDD" not in p
     assert "PosExplode" not in p and "posexplode" not in p
     assert "CartesianProduct" not in p
@@ -191,7 +186,7 @@ def test_pq_hires_staged_equals_inplan_and_never_retrains(
     inplan = {tuple(r) for r in reg["ann_pq_hires"](spark, SF).collect()}
     df = reg["ann_pq_hires_staged"](spark, SF)
     assert inplan == {tuple(r) for r in df.collect()}
-    assert "ExistingRDD" not in _plan(spark, df)
+    assert "ExistingRDD" not in explain(df)
 
 
 def test_pq_staged_encode_is_single_scan_zero_shuffle(
@@ -214,7 +209,7 @@ def test_pq_staged_encode_is_single_scan_zero_shuffle(
         vecs, m=2, dims=4, n_clusters=3, kmeans_iter=2,
         books=spark.read.parquet(path),
     )
-    plan = _plan(spark, enc)
+    plan = explain(enc)
     # one exchange total: the broadcast of the folded book row; the
     # corpus side must shuffle nowhere
     assert "Exchange hashpartitioning" not in plan
@@ -356,8 +351,6 @@ def test_staged_point_query_keeps_partition_pruning(spark, monkeypatch, tmp_path
     df = all_queries()["point_target_disease_staged"](
         spark, "/root/testdata/sf0.001"
     )
-    p = spark._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    p = explain(df)
     assert "PartitionFilters: [isnotnull(diseaseId" in p
     assert "EqualTo(targetId,T7)" in p

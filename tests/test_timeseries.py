@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import shuffles
 from timeseries_spark.operators.timeseries import (
     counter_rate,
     downsample_m4,
@@ -20,20 +21,6 @@ from timeseries_spark.operators.timeseries import (
     series_gaps,
     time_weighted_avg,
 )
-from timeseries_spark.queries import all_queries
-
-SF = "/root/testdata/sf0.001"
-
-
-def _plan(spark, name):
-    df = all_queries()[name](spark, SF)
-    return spark._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
-def _shuffles(p: str) -> int:
-    return (p.count("Exchange") - p.count("BroadcastExchange")) // 2
 
 
 def test_interpolate_interior_and_edges(spark):
@@ -103,20 +90,20 @@ def test_rolling_zscore_spike_flagged_constant_not(spark):
     assert all(out[("c", t)]["z"] is None for t in range(1, 5))
 
 
-def test_ohlc_plan_single_shuffle_partial_agg(spark):
+def test_ohlc_plan_single_shuffle_partial_agg(plan):
     """One hash-agg shuffle at bucket grain, with map-side partial
     min_by/max_by — not a sort-based plan, no SinglePartition."""
-    p = _plan(spark, "resample_ohlc")
-    assert _shuffles(p) == 1
+    p = plan("resample_ohlc")
+    assert shuffles(p) == 1
     assert "SinglePartition" not in p
     assert "partial_min_by" in p or "HashAggregate" in p
 
 
-def test_timeseries_windows_stay_keyed(spark):
+def test_timeseries_windows_stay_keyed(plan):
     """Gap-fill / EMA / anomaly windows partition by series key — a
     SinglePartition window would funnel 100 TB through one task."""
     for name in ("gapfill_interpolate", "ema_daily", "rolling_anomaly"):
-        p = _plan(spark, name)
+        p = plan(name)
         assert "SinglePartition" not in p, name
         assert "CartesianProduct" not in p, name
 
@@ -145,8 +132,8 @@ def test_rolling_median_odd_even_null_windows(spark):
         rolling_median(df, ["k"], "t", "v", n_rows=0)
 
 
-def test_rolling_median_window_stays_keyed(spark):
-    p = _plan(spark, "rolling_median_daily")
+def test_rolling_median_window_stays_keyed(plan):
+    p = plan("rolling_median_daily")
     assert "SinglePartition" not in p
     assert "CartesianProduct" not in p
 
@@ -243,12 +230,12 @@ def test_rolling_mad_robust_where_zscore_masked(spark):
         rolling_mad_score(df, ["k"], "t", "v", 0, 3.5)
 
 
-def test_new_timeseries_plans_stay_keyed(spark):
+def test_new_timeseries_plans_stay_keyed(plan):
     for name in (
         "counter_rate_hourly", "twa_daily", "downsample_m4",
         "series_gaps_daily", "rolling_mad_daily",
     ):
-        p = _plan(spark, name)
+        p = plan(name)
         assert "SinglePartition" not in p, name
         assert "CartesianProduct" not in p, name
 
@@ -279,9 +266,9 @@ def test_cusum_detects_level_shift(spark):
     assert got[1]["cusum_up"] == 0.0
 
 
-def test_trend_acf_plans_single_pass(spark):
+def test_trend_acf_plans_single_pass(plan):
     for name in ("series_trend", "acf_daily", "cusum_daily"):
-        p = _plan(spark, name)
+        p = plan(name)
         assert "SinglePartition" not in p, name
         assert "CartesianProduct" not in p, name
 
@@ -329,9 +316,9 @@ def test_seasonal_naive_eval_prefers_true_season(spark):
         seasonal_naive_eval(df, ["k"], "t", "v", season=1)
 
 
-def test_drift_eval_plans_keyed(spark):
+def test_drift_eval_plans_keyed(plan):
     for name in ("psi_value_drift", "seasonal_naive_eval"):
-        p = _plan(spark, name)
+        p = plan(name)
         assert "SinglePartition" not in p, name
         assert "CartesianProduct" not in p, name
 
@@ -375,8 +362,8 @@ def test_holt_matches_recurrence_and_catches_trend(spark):
         holt_linear(ramp, ["k"], "t", "v", 0.5, 1.5)
 
 
-def test_holt_plan_stays_keyed(spark):
-    p = _plan(spark, "holt_daily")
+def test_holt_plan_stays_keyed(plan):
+    p = plan("holt_daily")
     assert "SinglePartition" not in p
     assert "CartesianProduct" not in p
 
@@ -398,7 +385,7 @@ def test_winsorize_clamps_only_tails(spark):
         winsorize(df, ["k"], "v", 0.5, 0.5)
 
 
-def test_winsorize_plan_broadcasts_bands(spark):
-    p = _plan(spark, "winsorized_values")
+def test_winsorize_plan_broadcasts_bands(plan):
+    p = plan("winsorized_values")
     assert "BroadcastHashJoin" in p or "BroadcastExchange" in p
     assert "CartesianProduct" not in p

@@ -4,25 +4,22 @@ A partition-less window compiles to a SinglePartition WindowExec —
 every input row funnels through ONE task. All current sites are
 bounded by construction, but 115 known-benign WARNs in a full registry
 run meant the NEXT unbounded global window would land silently. This
-test walks every registered query's pre-AQE physical plan
-(tools/window_lint.py) and asserts partition-less window nodes appear
-only in the whitelisted queries, each documented with WHY its input is
-bounded. Scope note: the walk covers the RETURNED DataFrame's plan;
-iterative operators' interior eager jobs (the kmeans Lloyd seed's
-k-row window after .limit(k), kmeans.py:63-69) execute before the
-query returns and are bounded at their own call sites.
+test reads every registered query's partition-less window count from
+the session plan cache (tests/conftest.py) and asserts such window
+nodes appear only in the whitelisted queries, each documented with WHY
+its input is bounded. Scope note: the walk covers the RETURNED
+DataFrame's plan; iterative operators' interior eager jobs (the kmeans
+Lloyd seed's k-row window after .limit(k), kmeans.py:63-69) execute
+before the query returns and are bounded at their own call sites.
 """
 
 from __future__ import annotations
 
-import sys
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo/tools")
-
-from window_lint import partitionless_windows  # noqa: E402
+from tests.conftest import partitionless_windows
+from timeseries_spark.queries import all_queries
 
 SF = "/root/testdata/sf0.001"
 
@@ -44,19 +41,21 @@ BOUNDED_WINDOW_WHITELIST = {
 }
 
 
-def test_registry_has_no_unbounded_global_windows(spark):
-    from timeseries_spark.queries import all_queries
-
-    offenders: dict[str, int] = {}
-    for name, fn in sorted(all_queries().items()):
-        hits = partitionless_windows(fn(spark, SF))
-        if hits:
-            offenders[name] = len(hits)
-    unlisted = set(offenders) - BOUNDED_WINDOW_WHITELIST
+def test_registry_has_no_unbounded_global_windows(registry_plan):
+    offenders = {
+        name: n
+        for name in sorted(all_queries())
+        if (n := registry_plan(name).windows)
+    }
+    unlisted = {
+        name: n
+        for name, n in offenders.items()
+        if name not in BOUNDED_WINDOW_WHITELIST
+    }
     assert not unlisted, (
-        "partition-less window in non-whitelisted quer(ies) "
-        f"{sorted(unlisted)} — if the window input is bounded, document "
-        "it in BOUNDED_WINDOW_WHITELIST; if not, partition it"
+        "partition-less window(s) in non-whitelisted quer(ies), "
+        f"query -> hit count {unlisted} — if the window input is bounded, "
+        "document it in BOUNDED_WINDOW_WHITELIST; if not, partition it"
     )
     # the whitelist must not rot: every entry still has its window
     stale = BOUNDED_WINDOW_WHITELIST - set(offenders)

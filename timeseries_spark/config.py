@@ -8,6 +8,7 @@ reading globals.
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass, field
 
 
@@ -80,6 +81,14 @@ class EngineConfig:
     max_score: float = 1.64
     top_k: int = 50
     datasources: tuple[DataSource, ...] = field(default=DATA_SOURCES)
+
+    def __post_init__(self) -> None:
+        # both are spliced into the novelty SQL as ``{x!r}D``; NaN/inf
+        # render as ``nanD``/``infD``, which Spark cannot resolve
+        for name in ("novelty_scale", "novelty_shift"):
+            value = getattr(self, name)
+            if not math.isfinite(value):
+                raise ValueError(f"{name} must be finite, got {value!r}")
 
     @property
     def sentinel_year(self) -> int:

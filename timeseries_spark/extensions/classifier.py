@@ -21,10 +21,26 @@ Determinism discipline (the oracle replays training exactly):
 
 from __future__ import annotations
 
+import re
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 from timeseries_spark.functions.inline import inline_rows
+
+_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+
+
+def _check_features(feature_cols: Sequence[str]) -> None:
+    """Derived identifiers (``w_<c>``, ``g_<c>``, ``o_w_<c>``) are spliced
+    unquoted into SQL strings, so a feature name must be a plain
+    identifier; anything else would fail later as an opaque parse
+    error."""
+    for c in feature_cols:
+        if not _IDENT.fullmatch(c):
+            raise ValueError(
+                f"feature column {c!r} is not a plain identifier"
+                " ([A-Za-z_][A-Za-z0-9_]*)"
+            )
 
 
 def _snap(col, scale: float):
@@ -51,6 +67,7 @@ def logreg_fit(
     each round re-reads it once."""
     if n_iter < 1:
         raise ValueError(f"n_iter must be >= 1, got {n_iter}")
+    _check_features(feature_cols)
     spark = df.sparkSession
     w_cols = ["w_bias"] + [f"w_{c}" for c in feature_cols]
     w = inline_rows(
@@ -121,6 +138,7 @@ def logreg_metrics(
 ) -> DataFrame:
     """One-row training report: the learned weights plus accuracy
     (decision at p > 0.5) and mean log-loss, both snapped at 1e-6."""
+    _check_features(feature_cols)
     j = df.crossJoin(F.broadcast(weights))
     p = F.lit(1.0) / (F.lit(1.0) + F.exp(-_z(feature_cols)))
     y = F.col(label_col)

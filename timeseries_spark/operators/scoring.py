@@ -212,20 +212,20 @@ def overall_score(
         year_col,
         F.coalesce(F.col(year_col), F.lit(cfg.sentinel_year)).cast("int"),
     )
-    if weights is not None:
+    if weights:
         # round-17 (guide §2.4): the weight registry is vocab-grain and
-        # known at plan time, so it multiplies in as a CASE projection
-        # instead of a broadcast left join — one BroadcastExchange build
-        # (a blocking driver job per materialization) gone from every
-        # weighted-overall plan. Value-identical: the join produced
+        # known at plan time, so it multiplies in as a literal-map
+        # lookup instead of a broadcast left join — one BroadcastExchange
+        # build (a blocking driver job per materialization) gone from
+        # every weighted-overall plan. Value-identical: the join produced
         # score * coalesce(weight, 1.0) with at most one match per
-        # source (dict keys are unique), which is exactly this chain's
-        # matched-key branch / 1.0 fallback on the same doubles.
-        w_expr = F.lit(1.0)
-        for wk, wv in reversed(list(weights.items())):
-            w_expr = F.when(
-                F.col(source_col) == F.lit(wk), F.lit(float(wv))
-            ).otherwise(w_expr)
+        # source (dict keys are unique); a map lookup of an unknown or
+        # NULL source is NULL, so the same 1.0 fallback applies. A flat
+        # map keeps the expression's depth (and its py4j construction
+        # calls) from growing with each source, as a CASE chain would.
+        pairs = [x for wk, wv in weights.items() for x in (wk, float(wv))]
+        w_map = F.create_map(*map(F.lit, pairs))
+        w_expr = F.coalesce(w_map[F.col(source_col)], F.lit(1.0))
         data = data.withColumn(score_col, F.col(score_col) * w_expr)
 
     pooled = data.groupBy(*keys, year_col).agg(
