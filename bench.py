@@ -24,7 +24,7 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 HEADLINE = [
     "assoc_score_yearly",

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from timeseries_spark.config import EngineConfig
 from timeseries_spark import schemas
 from timeseries_spark.queries import all_queries
-from timeseries_spark.session import get_spark
+from timeseries_spark.session import explain, get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -69,15 +69,6 @@ def sf_dir() -> str:
 
 def load(spark, sf_dir: str, name: str):
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def explain(df: DataFrame) -> str:
-    """``df``'s formatted-mode explain string. Every node appears twice
-    in it (tree line + detail header), so raw substring counts of a node
-    name are twice the node count."""
-    return df.sparkSession._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
 
 
 def shuffles(p: str) -> int:

@@ -6,18 +6,16 @@ test can't pass by broadcasting."""
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import explain, shuffles
+from tests.conftest import SF_DIR, explain, shuffles
 from timeseries_spark.sources.io import write_bucketed
-
-SF = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
 def bucketed(spark):
     # managed tables land in the session's default warehouse (static conf);
     # gitignored and dropped after the module
-    orders = spark.read.parquet(f"{SF}/orders.parquet")
-    customer = spark.read.parquet(f"{SF}/customer.parquet")
+    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
+    customer = spark.read.parquet(f"{SF_DIR}/customer.parquet")
     write_bucketed(orders, "orders_b", "o_custkey", 8, sort_cols="o_custkey")
     write_bucketed(
         customer, "customer_b", "c_custkey", 8, sort_cols="c_custkey"
@@ -42,9 +40,9 @@ def test_bucketed_join_has_no_shuffle(spark, bucketed):
         assert shuffles(p) <= 1  # groupBy only — zero for the join
         # correctness unchanged vs the unbucketed plan
         plain = (
-            spark.read.parquet(f"{SF}/orders.parquet")
+            spark.read.parquet(f"{SF_DIR}/orders.parquet")
             .join(
-                spark.read.parquet(f"{SF}/customer.parquet"),
+                spark.read.parquet(f"{SF_DIR}/customer.parquet"),
                 F.col("o_custkey") == F.col("c_custkey"),
             )
             .groupBy("c_mktsegment")

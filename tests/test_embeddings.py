@@ -72,10 +72,10 @@ def test_jl_sign_is_balanced_and_deterministic(spark):
     assert row2["signs"] == signs
 
 
-def test_jl_preserves_norms_in_expectation(spark):
+def test_jl_preserves_norms_in_expectation(spark, sf_dir):
     """JL contract: E[||proj||²] = ||x||² — check the mean ratio over
     the sf0.001 embeddings is within 20%."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     proj = random_projection(emb, dims=64, out_dims=16)
     orig = emb.select(
         "vec_id",

@@ -664,7 +664,11 @@ def test_pq_matches_brute_force_with_full_pool(spark, sf_dir):
     must reproduce brute-force top-k identically (the codebook can then
     never evict a true neighbor); encoding must emit one code per
     subspace; and a dims/m mismatch is a loud error."""
-    from timeseries_spark.extensions.pq import pq_encode, pq_topk
+    from timeseries_spark.extensions.pq import (
+        pq_encode,
+        pq_fit_books,
+        pq_topk,
+    )
     from timeseries_spark.extensions.similarity import brute_force_topk
     from timeseries_spark.queries import load
 
@@ -677,18 +681,19 @@ def test_pq_matches_brute_force_with_full_pool(spark, sf_dir):
         (r["query_id"], r["rank"]): (r["neighbor_id"], r["cos_sim"])
         for r in brute_force_topk(emb, qs, k=3).collect()
     }
+    books = pq_fit_books(emb, m=2, dims=64, n_clusters=4, kmeans_iter=2)
     full_pool = {
         (r["query_id"], r["rank"]): (r["neighbor_id"], r["cos_sim"])
-        for r in pq_topk(emb, qs, k=3, rerank_factor=50).collect()
+        for r in pq_topk(emb, qs, books, k=3, rerank_factor=50).collect()
     }
     assert full_pool == exact
-    enc = pq_encode(emb, m=2, dims=64, n_clusters=4, kmeans_iter=2)
+    enc = pq_encode(emb, books, m=2, dims=64, n_clusters=4)
     row = enc.first()
     assert len(row["codes"]) == 2
     assert all(0 <= c < 4 for c in row["codes"])
     assert len(row["dq"]) == 64
     with pytest.raises(ValueError, match="divide evenly"):
-        pq_encode(emb, m=3, dims=64)
+        pq_encode(emb, books, m=3, dims=64)
 
 
 def test_take_n_per_stratum_exact_counts_and_nesting(spark):
@@ -803,7 +808,8 @@ def test_ivf_pq_full_probe_full_pool_matches_brute_force(spark, sf_dir):
     """Probing ALL clusters with a corpus-wide re-rank pool removes both
     approximation tiers, so IVF-PQ must reproduce brute-force top-k —
     the recall contract of the composed index."""
-    from timeseries_spark.extensions.pq import ivf_pq_topk
+    from timeseries_spark.extensions.kmeans import kmeans_assign
+    from timeseries_spark.extensions.pq import ivf_pq_topk, pq_fit_books
     from timeseries_spark.extensions.similarity import brute_force_topk
     from timeseries_spark.queries import load
 
@@ -816,11 +822,13 @@ def test_ivf_pq_full_probe_full_pool_matches_brute_force(spark, sf_dir):
         (r["query_id"], r["rank"]): (r["neighbor_id"], r["cos_sim"])
         for r in brute_force_topk(emb, qs, k=3).collect()
     }
+    clusters = kmeans_assign(emb, k=4, max_iter=2)
+    vecs = emb.join(clusters.select("vec_id", "cluster"), "vec_id")
+    books = pq_fit_books(emb, m=2, dims=64, n_clusters=4, kmeans_iter=2)
     got = {
         (r["query_id"], r["rank"]): (r["neighbor_id"], r["cos_sim"])
         for r in ivf_pq_topk(
-            emb, qs, k=3, nprobe=4, n_clusters=4, kmeans_iter=2,
-            rerank_factor=50,
+            vecs, qs, "cluster", books, k=3, nprobe=4, rerank_factor=50,
         ).collect()
     }
     assert got == exact

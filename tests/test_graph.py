@@ -6,10 +6,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import SF_DIR
 from timeseries_spark.extensions.graph import bipartite_edges, pagerank
 from timeseries_spark.queries import all_queries
-
-SF = "/root/testdata/sf0.001"
 
 
 def test_two_node_symmetric_graph_is_uniform(spark):
@@ -59,7 +58,7 @@ def test_bad_iter_raises(spark):
 
 
 def test_pagerank_mass_conserved_on_real_graph(spark):
-    df = all_queries()["pagerank_parts_suppliers"](spark, SF)
+    df = all_queries()["pagerank_parts_suppliers"](spark, SF_DIR)
     total = df.agg(F.sum("rank").alias("t")).collect()[0]["t"]
     assert abs(total - 1.0) < 1e-4
 

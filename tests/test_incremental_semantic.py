@@ -16,10 +16,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from tests.conftest import SF_DIR
 from timeseries_spark.extensions.dedup import incremental_semantic_dedup
 from timeseries_spark.extensions.kmeans import kmeans_fit
-
-SF = "/root/testdata/sf0.001"
 
 
 def _docs(spark, ids_sources):
@@ -116,8 +115,8 @@ def test_staged_equals_fresh_fit(spark):
     # contract, exercised end-to-end through the incremental composer)
     from timeseries_spark.queries import load
 
-    emb = load(spark, SF, "embeddings")
-    docs = load(spark, SF, "documents")
+    emb = load(spark, SF_DIR, "embeddings")
+    docs = load(spark, SF_DIR, "documents")
     is_shard = F.pmod(F.col("vec_id"), F.lit(5)) == 0
     corpus = emb.filter(~is_shard)
     shard = emb.filter(is_shard)
@@ -141,8 +140,8 @@ def test_plan_shape_no_allpairs(spark):
     # a BroadcastNestedLoopJoin-free projection)
     from timeseries_spark.queries import load
 
-    emb = load(spark, SF, "embeddings")
-    docs = load(spark, SF, "documents")
+    emb = load(spark, SF_DIR, "embeddings")
+    docs = load(spark, SF_DIR, "documents")
     is_shard = F.pmod(F.col("vec_id"), F.lit(5)) == 0
     _, cents = kmeans_fit(emb.filter(~is_shard), k=4, max_iter=3)
     out = incremental_semantic_dedup(
@@ -178,8 +177,8 @@ def test_streaming_ingest_equals_sequential_batch(spark, tmp_path_factory):
     from timeseries_spark.streaming.incremental import SemanticIngestSink
 
     base = tmp_path_factory.mktemp("semingest")
-    emb = load(spark, SF, "embeddings")
-    docs = load(spark, SF, "documents")
+    emb = load(spark, SF_DIR, "embeddings")
+    docs = load(spark, SF_DIR, "documents")
     rows = emb.join(docs.select("doc_id", "source"),
                     emb.vec_id == docs.doc_id).select(
         "doc_id", "source", "embedding"
@@ -245,8 +244,8 @@ def test_accepted_store_compaction_preserves_answers(spark, tmp_path_factory):
     from timeseries_spark.streaming.incremental import SemanticIngestSink
 
     base = tmp_path_factory.mktemp("semcompact")
-    emb = load(spark, SF, "embeddings")
-    docs = load(spark, SF, "documents")
+    emb = load(spark, SF_DIR, "embeddings")
+    docs = load(spark, SF_DIR, "documents")
     rows = emb.join(docs.select("doc_id", "source"),
                     emb.vec_id == docs.doc_id).select(
         "doc_id", "source", "embedding"
@@ -305,8 +304,8 @@ def test_checkpoint_replay_excludes_own_batch(spark, tmp_path_factory):
     from timeseries_spark.streaming.incremental import SemanticIngestSink
 
     base = tmp_path_factory.mktemp("semreplay")
-    emb = load(spark, SF, "embeddings")
-    docs = load(spark, SF, "documents")
+    emb = load(spark, SF_DIR, "embeddings")
+    docs = load(spark, SF_DIR, "documents")
     rows = emb.join(
         docs.select("doc_id", "source"), emb.vec_id == docs.doc_id
     ).select("doc_id", "source", "embedding")
@@ -353,8 +352,8 @@ def test_torn_write_without_success_marker_is_excluded(
     from timeseries_spark.streaming.incremental import SemanticIngestSink
 
     base = tmp_path_factory.mktemp("semtorn")
-    emb = load(spark, SF, "embeddings")
-    docs = load(spark, SF, "documents")
+    emb = load(spark, SF_DIR, "embeddings")
+    docs = load(spark, SF_DIR, "documents")
     rows = emb.join(
         docs.select("doc_id", "source"), emb.vec_id == docs.doc_id
     ).select("doc_id", "source", "embedding")

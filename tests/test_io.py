@@ -83,10 +83,10 @@ def test_shuffled_null_preserves_year_multiset(spark, evidence_dated):
     assert freeze(a.collect()) == freeze(b.collect())
 
 
-def test_register_views_sql_surface(spark):
+def test_register_views_sql_surface(spark, sf_dir):
     from timeseries_spark.sources.io import register_views
 
-    register_views(spark, "/root/testdata/sf0.001")
+    register_views(spark, sf_dir)
     n = spark.sql(
         "SELECT count(*) AS n FROM orders JOIN customer ON o_custkey = c_custkey"
     ).first()["n"]

@@ -93,7 +93,7 @@ def test_lint_sees_a_deliberate_bare_persist(tmp_path, monkeypatch):
     assert ("bad.py", "leaky") in lint._persist_sites()
 
 
-def test_registered_families_are_releasable(spark):
+def test_registered_families_are_releasable(spark, sf_dir):
     # the four freshly-enrolled families actually register under their
     # names when their operators run, and release frees them
     from pyspark.sql import functions as F
@@ -111,7 +111,7 @@ def test_registered_families_are_releasable(spark):
     pagerank(edges, n_iter=1).collect()
     assert len(caching.live_caches(spark, family="graph")) == 2
 
-    events = load(spark, "/root/testdata/sf0.001", "events")
+    events = load(spark, sf_dir, "events")
     types = [
         r[0]
         for r in events.select("event_type").distinct().limit(2).collect()

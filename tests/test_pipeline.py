@@ -147,7 +147,7 @@ def test_timeline_renders_to_decodable_ppm(spark, tmp_path):
         render_timeline_ppm([])
 
 
-def test_prepared_corpus_persists_partitioned(spark, tmp_path):
+def test_prepared_corpus_persists_partitioned(spark, tmp_path, sf_dir):
     """The prepare -> persist -> reload story end to end: corpus_prepare
     output lands as source-partitioned parquet (the S7 layout), reads
     back with identical rows, and partition pruning reaches the reloaded
@@ -155,7 +155,7 @@ def test_prepared_corpus_persists_partitioned(spark, tmp_path):
     from timeseries_spark.queries import all_queries
 
     out = str(tmp_path / "prepared")
-    df = all_queries()["corpus_prepare"](spark, "/root/testdata/sf0.001")
+    df = all_queries()["corpus_prepare"](spark, sf_dir)
     df.write.partitionBy("source").mode("overwrite").parquet(out)
 
     back = spark.read.parquet(out)

@@ -7,10 +7,8 @@ Counting note: in formatted mode every node appears twice (tree line +
 detail header), so raw substring counts are divided by 2.
 """
 
-from tests.conftest import explain, shuffles
+from tests.conftest import SF_DIR, explain, shuffles
 from timeseries_spark.queries import all_queries
-
-SF = "/root/testdata/sf0.001"
 
 
 def test_point_query_pushes_filter_and_prunes_columns(plan):
@@ -154,7 +152,7 @@ def test_semantic_dedup_pair_stage_no_all_pairs(spark):
     from timeseries_spark.extensions.similarity import embedding_near_dup
     from timeseries_spark.queries import load
 
-    emb = load(spark, SF, "embeddings")
+    emb = load(spark, SF_DIR, "embeddings")
     clusters = kmeans_assign(emb, k=4, max_iter=3)
     blocked = emb.join(clusters.select("vec_id", "cluster"), "vec_id")
     pairs = embedding_near_dup(blocked, threshold=0.30, block_col="cluster")
@@ -173,7 +171,7 @@ def test_shuffled_null_model_is_bucket_parallel(spark):
     from timeseries_spark.operators.scaffold import shuffled_null_years
     from timeseries_spark.queries import load
 
-    ev = load(spark, SF, "orders").select(
+    ev = load(spark, SF_DIR, "orders").select(
         F.col("o_orderkey").cast("string").alias("id"),
         F.year("o_orderdate").cast("int").alias("year"),
         "o_custkey",
@@ -215,7 +213,7 @@ def test_brute_force_topk_no_single_partition(spark):
     from timeseries_spark.extensions.similarity import brute_force_topk
     from timeseries_spark.queries import load
 
-    vecs = load(spark, SF, "embeddings")
+    vecs = load(spark, SF_DIR, "embeddings")
     # filter, not limit: a GlobalLimit on the query side would plan its
     # own (legitimate, tiny) SinglePartition and mask the assertion
     queries = vecs.filter(F.col("vec_id") < 4).select(
@@ -501,7 +499,7 @@ def test_pair_join_repartition_pin_survives_execution(spark):
     byte-based coalescing re-serializes the compute-bound cosine stage
     onto 1-2 tasks (the 5x regression this fix removed)."""
     q = all_queries()
-    df = q["dedup_embedding_cosine"](spark, SF)
+    df = q["dedup_embedding_cosine"](spark, SF_DIR)
     df.count()
     p = explain(df)
     assert "REPARTITION_BY_NUM" in p
@@ -587,7 +585,7 @@ def test_rank_stats_windows_are_distributed(spark, plan):
         assert not re.findall(
             r"windowspecdefinition\([^,)]*(?:ASC|DESC)", p
         ), name
-        df = q[name](spark, SF)
+        df = q[name](spark, SF_DIR)
         df.collect()
         final = (
             df._jdf.queryExecution()

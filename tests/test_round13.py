@@ -14,10 +14,8 @@ from __future__ import annotations
 
 import os
 
-from tests.conftest import explain
+from tests.conftest import SF_DIR, explain
 from timeseries_spark.extensions.dedup import auto_n_clusters
-
-SF = "/root/testdata/sf0.001"
 
 
 def test_auto_n_clusters_math():
@@ -58,9 +56,9 @@ def test_scaled_staged_matches_inplan(spark, tmp_path, monkeypatch):
         semantic_dedup_scaled_staged,
     )
 
-    plain = sorted(map(tuple, semantic_dedup_scaled(spark, SF).collect()))
+    plain = sorted(map(tuple, semantic_dedup_scaled(spark, SF_DIR).collect()))
     staged = sorted(
-        map(tuple, semantic_dedup_scaled_staged(spark, SF).collect())
+        map(tuple, semantic_dedup_scaled_staged(spark, SF_DIR).collect())
     )
     assert plain == staged
     assert len(plain) > 0
@@ -76,8 +74,8 @@ def test_scaled_k_binds(spark):
         semantic_dedup_scaled,
     )
 
-    pinned = sorted(map(tuple, semantic_dedup(spark, SF).collect()))
-    scaled = sorted(map(tuple, semantic_dedup_scaled(spark, SF).collect()))
+    pinned = sorted(map(tuple, semantic_dedup(spark, SF_DIR).collect()))
+    scaled = sorted(map(tuple, semantic_dedup_scaled(spark, SF_DIR).collect()))
     assert pinned != scaled
 
 
@@ -162,7 +160,7 @@ def test_scaled_dedup_pair_stage_no_all_pairs(spark):
     from timeseries_spark.extensions.similarity import embedding_near_dup
     from timeseries_spark.queries import load
 
-    emb = load(spark, SF, "embeddings")
+    emb = load(spark, SF_DIR, "embeddings")
     k = auto_n_clusters(emb.count(), target_block_size=512)
     clusters = kmeans_assign(emb, k=k, max_iter=3)
     blocked = emb.join(clusters.select("vec_id", "cluster"), "vec_id")
@@ -181,7 +179,7 @@ def test_postings_build_fans_out_small_scans(spark):
     from timeseries_spark.extensions.search import build_postings
     from timeseries_spark.queries import load
 
-    docs = load(spark, SF, "documents")
+    docs = load(spark, SF_DIR, "documents")
     if docs.rdd.getNumPartitions() >= 32:
         return  # guard is a no-op on this box; nothing to pin
     p = explain(build_postings(docs))

@@ -12,18 +12,17 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from tests.conftest import SF_DIR
 from timeseries_spark.extensions.dedup import (
     auto_n_clusters,
     incremental_semantic_dedup,
 )
 from timeseries_spark.queries import load
 
-SF = "/root/testdata/sf0.001"
-
 
 def _shard_corpus(spark):
-    docs = load(spark, SF, "documents")
-    emb = load(spark, SF, "embeddings")
+    docs = load(spark, SF_DIR, "documents")
+    emb = load(spark, SF_DIR, "embeddings")
     is_shard = F.pmod(F.col("vec_id"), F.lit(5)) == 0
     return (
         docs.filter(F.pmod(F.col("doc_id"), F.lit(5)) == 0),
@@ -107,7 +106,7 @@ def test_dedup_cache_lifecycle_released_after_materialize(spark):
     from timeseries_spark.extensions import dedup as dd
     from timeseries_spark.extensions.caching import live_caches
 
-    docs = load(spark, SF, "documents")
+    docs = load(spark, SF_DIR, "documents")
     baseline = sorted(
         map(tuple, dd.jaccard_pairs(docs, threshold=0.5).collect())
     )
@@ -140,7 +139,7 @@ def test_routed_assignment_exact_vs_flat(spark):
         kmeans_fit,
     )
 
-    emb = load(spark, SF, "embeddings")
+    emb = load(spark, SF_DIR, "embeddings")
     _, cents = kmeans_fit(emb, k=32, max_iter=3)
     flat = sorted(map(tuple, assign_to_centroids(emb, cents).collect()))
     routed = sorted(
@@ -162,7 +161,7 @@ def test_routed_assignment_plans_without_fine_broadcast(spark):
         kmeans_fit,
     )
 
-    emb = load(spark, SF, "embeddings")
+    emb = load(spark, SF_DIR, "embeddings")
     _, cents = kmeans_fit(emb, k=32, max_iter=3)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -189,7 +188,7 @@ def test_prototype_prune_marginal_variant(spark):
         kmeans_assign,
     )
 
-    emb = load(spark, SF, "embeddings")
+    emb = load(spark, SF_DIR, "embeddings")
     asg = kmeans_assign(emb, k=4, max_iter=3)
     got = cluster_prototype_prune(asg, 5, keep_central=False).collect()
     rows = asg.collect()
@@ -210,8 +209,8 @@ def test_hybrid_rerank_no_corpus_shuffle_outside_bm25(spark):
     from timeseries_spark.extensions.search import hybrid_rerank
     from timeseries_spark.queries import load as ld
 
-    docs = ld(spark, SF, "documents")
-    emb = ld(spark, SF, "embeddings")
+    docs = ld(spark, SF_DIR, "documents")
+    emb = ld(spark, SF_DIR, "embeddings")
     out = hybrid_rerank(docs, emb, ["spark", "hash"], 0, 20, 5)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
@@ -289,8 +288,8 @@ def test_staged_bm25_plan_has_no_text_rescan(spark):
     from timeseries_spark.extensions.search import bm25_topk
     from timeseries_spark.extensions.staging import staged_postings
 
-    docs = load(spark, SF, "documents")
-    idx = staged_postings(spark, docs, f"{SF}/documents.parquet")
+    docs = load(spark, SF_DIR, "documents")
+    idx = staged_postings(spark, docs, f"{SF_DIR}/documents.parquet")
     staged = bm25_topk(docs, ["spark", "hash"], k=5, postings=idx)
     plan = staged._jdf.queryExecution().executedPlan().toString()
     assert "documents.parquet" not in plan
@@ -309,7 +308,7 @@ def test_cusum_plan_no_window_no_single_partition(spark):
         cusum_changepoint_daily,
     )
 
-    out = cusum_changepoint_daily(spark, SF)
+    out = cusum_changepoint_daily(spark, SF_DIR)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
     assert "SinglePartition" not in plan

@@ -23,9 +23,8 @@ import math
 
 from pyspark.sql import functions as F
 
+from tests.conftest import SF_DIR
 from timeseries_spark.queries import load
-
-SF = "/root/testdata/sf0.001"
 
 
 def test_router_radii_are_unrounded_exact_distances(spark):
@@ -141,7 +140,7 @@ def test_search_cache_registered_and_released(spark):
     )
 
     release_search_caches()  # clean slate
-    docs = load(spark, SF, "documents")
+    docs = load(spark, SF_DIR, "documents")
     out = bm25_topk(docs, ["spark", "hash"], k=5)
     live = live_caches(spark, family="search")
     assert len(live) == 1
@@ -183,10 +182,10 @@ def test_hybrid_staged_plan_has_no_text_rescan(spark):
         search_hybrid_staged,
     )
 
-    staged = search_hybrid_staged(spark, SF)
+    staged = search_hybrid_staged(spark, SF_DIR)
     plan = staged._jdf.queryExecution().executedPlan().toString()
     assert "documents.parquet" not in plan
-    fresh = search_hybrid_rerank(spark, SF)
+    fresh = search_hybrid_rerank(spark, SF_DIR)
     assert sorted(map(tuple, staged.collect())) == sorted(
         map(tuple, fresh.collect())
     )
@@ -202,7 +201,7 @@ def test_sampled_dedup_binds_corpus_k_and_conserves_members(spark):
     from timeseries_spark.extensions.hashing import md5_long
     from timeseries_spark.queries.similarity import semantic_dedup_sampled
 
-    emb = load(spark, SF, "embeddings")
+    emb = load(spark, SF_DIR, "embeddings")
     n = emb.count()
     assert auto_n_clusters(n, target_block_size=512) == max(
         2, -(-n // 512)
@@ -218,9 +217,9 @@ def test_sampled_dedup_binds_corpus_k_and_conserves_members(spark):
         / n
     )
     assert 0.05 < frac < 0.25  # the hash sample is a real subset
-    out = semantic_dedup_sampled(spark, SF)
+    out = semantic_dedup_sampled(spark, SF_DIR)
     total = out.agg(F.sum("n_members")).collect()[0][0]
-    docs = load(spark, SF, "documents")
+    docs = load(spark, SF_DIR, "documents")
     embedded_docs = docs.join(
         emb.select(F.col("vec_id").alias("doc_id")), "doc_id"
     ).count()

@@ -15,9 +15,8 @@ import gc
 
 import pytest
 
+from tests.conftest import SF_DIR
 from timeseries_spark.queries import load
-
-SF = "/root/testdata/sf0.001"
 
 
 def test_cache_registry_entry_collects_with_dropped_session(spark):
@@ -71,7 +70,7 @@ def test_postings_stage_path_tracks_build_semantics_version(spark, tmp_path):
     from timeseries_spark.extensions import search, staging
 
     src = str(tmp_path / "docs")
-    load(spark, SF, "documents").limit(5).write.parquet(src)
+    load(spark, SF_DIR, "documents").limit(5).write.parquet(src)
 
     p_now = staging.postings_stage_path(src)
     assert f"v{search.POSTINGS_BUILD_VERSION}" != "v1"
@@ -130,7 +129,7 @@ def test_bm25_adhoc_term_filter_matches_prebuilt_index(spark):
         build_postings,
     )
 
-    docs = load(spark, SF, "documents").limit(40)
+    docs = load(spark, SF_DIR, "documents").limit(40)
     q = ["the", "data", "pipeline"]
     adhoc = bm25_topk(docs, q, k=10).collect()
     staged = bm25_topk(
@@ -281,7 +280,7 @@ def test_cache_built_in_scope_stores_bytes_sized_partitions(spark):
             small.unpersist()
 
 
-def test_numpy_fit_assign_bit_identical_to_jvm_argmin(spark):
+def test_numpy_fit_assign_bit_identical_to_jvm_argmin(spark, sf_dir):
     # round-16 session 2: kmeans_fit's in-loop assignment runs as a
     # NumPy kernel (_argmin_assign_np). Pin bit-identity against the
     # JVM broadcast-argmin reference (_argmin_assign) on real
@@ -296,7 +295,7 @@ def test_numpy_fit_assign_bit_identical_to_jvm_argmin(spark):
         _argmin_assign_np,
     )
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     pts = emb.select(
         F.col("vec_id").alias("vid"),
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),

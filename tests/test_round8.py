@@ -326,14 +326,12 @@ def test_winnowing_guarantee_and_short_docs(spark):
     assert all(3 not in p for p in pairs)
 
 
-def test_entity_resolution_clusters_near_names(spark):
+def test_entity_resolution_clusters_near_names(spark, sf_dir):
     # run the registered query end-to-end at the smallest SF: every
     # name resolves, canonical is a cluster member, sizes consistent
     import __spark_entry__ as e
 
-    df = e.queries()["entity_resolution_parts"](
-        spark, "/root/testdata/sf0.001"
-    )
+    df = e.queries()["entity_resolution_parts"](spark, sf_dir)
     rows = df.collect()
     assert rows
     by_canon = {}

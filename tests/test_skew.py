@@ -4,18 +4,17 @@ exactly (sums, counts, multiset of collected values, join output)."""
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import SF_DIR
 from timeseries_spark.operators.skew import (
     salted_collect_list,
     salted_join,
     salted_sum,
 )
 
-SF = "/root/testdata/sf0.001"
-
 
 @pytest.fixture(scope="module")
 def lineitem(spark):
-    return spark.read.parquet(f"{SF}/lineitem.parquet")
+    return spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
 
 
 def test_salted_sum_matches_plain(lineitem):
@@ -51,7 +50,7 @@ def test_salted_collect_list_same_multiset(lineitem):
 
 
 def test_salted_join_matches_plain(spark, lineitem):
-    orders = spark.read.parquet(f"{SF}/orders.parquet").select(
+    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet").select(
         F.col("o_orderkey").alias("l_orderkey"), "o_orderpriority"
     )
     plain = (
@@ -71,7 +70,7 @@ def test_salted_join_matches_plain(spark, lineitem):
 
 def test_salted_join_left_keeps_unmatched(spark, lineitem):
     some_orders = (
-        spark.read.parquet(f"{SF}/orders.parquet")
+        spark.read.parquet(f"{SF_DIR}/orders.parquet")
         .filter(F.col("o_orderkey") % 2 == 0)
         .select(F.col("o_orderkey").alias("l_orderkey"), "o_orderpriority")
     )

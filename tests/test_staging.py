@@ -11,14 +11,12 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import explain
+from tests.conftest import SF_DIR, explain
 from timeseries_spark.extensions.kmeans import (
     assign_to_centroids,
     kmeans_assign,
     kmeans_fit,
 )
-
-SF = "/root/testdata/sf0.001"
 
 
 @pytest.fixture()
@@ -98,11 +96,14 @@ def test_staged_probe_plan_has_no_lloyd_subtree(spark, tmp_path, monkeypatch):
     from timeseries_spark.queries import load
     from timeseries_spark.queries.similarity import _queries_df
 
-    emb = load(spark, SF, "embeddings")
+    emb = load(spark, SF_DIR, "embeddings")
     cents = staged_centroids(
-        spark, emb, f"{SF}/embeddings.parquet", k=4, max_iter=3
+        spark, emb, f"{SF_DIR}/embeddings.parquet", k=4, max_iter=3
     )
-    probe = ivf_topk(emb, _queries_df(spark, SF), k=5, centroids=cents)
+    vecs = emb.join(
+        assign_to_centroids(emb, cents).select("vec_id", "cluster"), "vec_id"
+    )
+    probe = ivf_topk(vecs, _queries_df(spark, SF_DIR), "cluster", k=5)
     p = explain(probe)
     assert "ExistingRDD" not in p
     assert "PosExplode" not in p and "posexplode" not in p
@@ -114,8 +115,8 @@ def test_staged_equals_inplan_results(spark, tmp_path, monkeypatch):
     from timeseries_spark.queries import all_queries
 
     reg = all_queries()
-    inplan = {tuple(r) for r in reg["ann_ivf_topk"](spark, SF).collect()}
-    staged = {tuple(r) for r in reg["ann_ivf_staged"](spark, SF).collect()}
+    inplan = {tuple(r) for r in reg["ann_ivf_topk"](spark, SF_DIR).collect()}
+    staged = {tuple(r) for r in reg["ann_ivf_staged"](spark, SF_DIR).collect()}
     assert inplan == staged
 
 
@@ -137,21 +138,20 @@ def test_stage_path_keyed_by_mtime(tmp_path):
 
 
 def test_pq_staged_encode_equals_inplan(spark, cloud, tmp_path):
-    # the persisted (centroid, mean) artifact must reproduce the
-    # in-plan encoding exactly: same codes, same reconstruction
+    # the book read back from parquet must encode exactly as the book in
+    # memory: same codes, same reconstruction
     from timeseries_spark.extensions.pq import pq_encode, pq_fit_books
 
     vecs = cloud.withColumn(
         "embedding",
         F.flatten(F.array("embedding", "embedding")),
     )  # 4 dims so m=2 splits evenly
-    inplan = pq_encode(vecs, m=2, dims=4, n_clusters=3, kmeans_iter=2)
     books = pq_fit_books(vecs, m=2, dims=4, n_clusters=3, kmeans_iter=2)
+    inplan = pq_encode(vecs, books, m=2, dims=4, n_clusters=3)
     path = str(tmp_path / "books")
     books.write.parquet(path)
     staged = pq_encode(
-        vecs, m=2, dims=4, n_clusters=3, kmeans_iter=2,
-        books=spark.read.parquet(path),
+        vecs, spark.read.parquet(path), m=2, dims=4, n_clusters=3
     )
     key = lambda r: r["vec_id"]  # noqa: E731
     a = sorted(inplan.collect(), key=key)
@@ -166,8 +166,8 @@ def test_pq_staged_query_equals_inplan(spark, tmp_path, monkeypatch):
     from timeseries_spark.queries import all_queries
 
     reg = all_queries()
-    inplan = {tuple(r) for r in reg["ann_pq_topk"](spark, SF).collect()}
-    staged = {tuple(r) for r in reg["ann_pq_staged"](spark, SF).collect()}
+    inplan = {tuple(r) for r in reg["ann_pq_topk"](spark, SF_DIR).collect()}
+    staged = {tuple(r) for r in reg["ann_pq_staged"](spark, SF_DIR).collect()}
     assert inplan == staged
 
 
@@ -183,10 +183,31 @@ def test_pq_hires_staged_equals_inplan_and_never_retrains(
     from timeseries_spark.queries import all_queries
 
     reg = all_queries()
-    inplan = {tuple(r) for r in reg["ann_pq_hires"](spark, SF).collect()}
-    df = reg["ann_pq_hires_staged"](spark, SF)
+    inplan = {tuple(r) for r in reg["ann_pq_hires"](spark, SF_DIR).collect()}
+    df = reg["ann_pq_hires_staged"](spark, SF_DIR)
     assert inplan == {tuple(r) for r in df.collect()}
     assert "ExistingRDD" not in explain(df)
+
+
+def test_pq_encode_rejects_truncated_book(spark, cloud):
+    # the book-size guard is the probe's only check that the table it
+    # was handed is the one its m/n_clusters describe: a book missing
+    # a subspace must fail the job, not encode against what is left
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import PySparkException
+
+    from timeseries_spark.extensions.pq import pq_encode, pq_fit_books
+
+    vecs = cloud.withColumn(
+        "embedding",
+        F.flatten(F.array("embedding", "embedding")),
+    )  # 4 dims so m=2 splits evenly
+    books = pq_fit_books(vecs, m=2, dims=4, n_clusters=3, kmeans_iter=2)
+    short = books.filter(F.col("sub") == 0)
+    with pytest.raises(
+        (PySparkException, Py4JJavaError), match="book must carry exactly 6"
+    ):
+        pq_encode(vecs, short, m=2, dims=4, n_clusters=3).collect()
 
 
 def test_pq_staged_encode_is_single_scan_zero_shuffle(
@@ -206,8 +227,7 @@ def test_pq_staged_encode_is_single_scan_zero_shuffle(
     path = str(tmp_path / "books")
     books.write.parquet(path)
     enc = pq_encode(
-        vecs, m=2, dims=4, n_clusters=3, kmeans_iter=2,
-        books=spark.read.parquet(path),
+        vecs, spark.read.parquet(path), m=2, dims=4, n_clusters=3
     )
     plan = explain(enc)
     # one exchange total: the broadcast of the folded book row; the
@@ -226,8 +246,8 @@ def test_ivf_pq_staged_query_equals_inplan(spark, tmp_path, monkeypatch):
     from timeseries_spark.queries import all_queries
 
     reg = all_queries()
-    inplan = {tuple(r) for r in reg["ann_ivf_pq"](spark, SF).collect()}
-    staged = {tuple(r) for r in reg["ann_ivf_pq_staged"](spark, SF).collect()}
+    inplan = {tuple(r) for r in reg["ann_ivf_pq"](spark, SF_DIR).collect()}
+    staged = {tuple(r) for r in reg["ann_ivf_pq_staged"](spark, SF_DIR).collect()}
     assert inplan == staged
 
 
@@ -339,7 +359,7 @@ def test_staged_table_publish_is_atomic(spark, tmp_path, monkeypatch):
     assert not [p for p in os.listdir(os.path.dirname(path)) if ".tmp-" in p]
 
 
-def test_staged_point_query_keeps_partition_pruning(spark, monkeypatch, tmp_path):
+def test_staged_point_query_keeps_partition_pruning(spark, monkeypatch, tmp_path, sf_dir):
     """The round-11 schema-sidecar read path casts every column back to
     its declared type; identity casts must be ELIMINATED so the staged
     point query still reaches the scan with PartitionFilters (diseaseId)
@@ -348,9 +368,7 @@ def test_staged_point_query_keeps_partition_pruning(spark, monkeypatch, tmp_path
     monkeypatch.setenv("SPARK_GRAFT_STAGE_DIR", str(tmp_path / "stage"))
     from timeseries_spark.queries import all_queries
 
-    df = all_queries()["point_target_disease_staged"](
-        spark, "/root/testdata/sf0.001"
-    )
+    df = all_queries()["point_target_disease_staged"](spark, sf_dir)
     p = explain(df)
     assert "PartitionFilters: [isnotnull(diseaseId" in p
     assert "EqualTo(targetId,T7)" in p

@@ -4,6 +4,7 @@ identical results via readStream (availableNow drain) and batch."""
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import SF_DIR
 from timeseries_spark.queries import load
 from timeseries_spark.streaming import (
     read_event_stream,
@@ -12,15 +13,13 @@ from timeseries_spark.streaming import (
     windowed_type_counts,
 )
 
-SF = "/root/testdata/sf0.001"
-
 
 @pytest.fixture(scope="module")
 def event_dir(spark, tmp_path_factory):
     """Re-materialize events as micros timestamps so the streaming source
     (explicit schema, no nanos) can read them."""
     out = str(tmp_path_factory.mktemp("events_stream"))
-    load(spark, SF, "events").write.mode("overwrite").parquet(out)
+    load(spark, SF_DIR, "events").write.mode("overwrite").parquet(out)
     return out
 
 
@@ -145,7 +144,7 @@ def test_stream_dedup_within_watermark(spark, tmp_path_factory):
         read_event_stream,
     )
 
-    events = load(spark, SF, "events").limit(200)
+    events = load(spark, SF_DIR, "events").limit(200)
     d = str(tmp_path_factory.mktemp("dup_events"))
     # two identical deliveries: maxFilesPerTrigger=1 makes them separate
     # micro-batches, so dedup must happen across batch boundaries (state)

@@ -18,10 +18,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from tests.conftest import partitionless_windows
+from tests.conftest import SF_DIR, partitionless_windows
 from timeseries_spark.queries import all_queries
 
-SF = "/root/testdata/sf0.001"
 
 # every query allowed to carry a partition-less window node, with the
 # bounded-cardinality argument. Adding a name here requires the same
@@ -67,7 +66,7 @@ def test_lint_catches_a_deliberate_unbounded_window(spark):
     # corpus-grain global row_number
     from timeseries_spark.queries import load
 
-    docs = load(spark, SF, "documents")
+    docs = load(spark, SF_DIR, "documents")
     bad = docs.withColumn(
         "rn", F.row_number().over(Window.orderBy("doc_id"))
     )
@@ -89,8 +88,8 @@ def test_whitelisted_windows_feed_from_bounded_subtrees(spark):
     from timeseries_spark.extensions.text import vocab_topk
     from timeseries_spark.queries import load
 
-    docs = load(spark, SF, "documents")
-    events = load(spark, SF, "events")
+    docs = load(spark, SF_DIR, "documents")
+    events = load(spark, SF_DIR, "events")
     # quantile_histogram_sketch: window input = the bin table, ≤50 rows
     assert histogram_counts(events, "value", 0.0, 500.0, 50).count() <= 50
     # lang_source_chi2: window input = the contingency cells, bounded

@@ -21,9 +21,14 @@ exactly without tracking which centroid table the early-exit loop
 stopped on. Similarities are left-fold doubles rounded to 6dp, ranks
 tie-break on neighbor id.
 
+Fit once, probe many: ``pq_fit_books`` trains the m codebooks into one
+m*k-row table (kept in memory within a build, or staged to parquet by
+extensions/staging.py), and every probe — ``pq_encode``, ``pq_topk``,
+``ivf_pq_topk`` — takes that table; no probe trains.
+
 Plan shape at 100 TB: each subspace's training reduces the corpus
-through dim-keyed aggregates (never collects it); codebooks are k rows,
-broadcast; encoding is m broadcast joins on the corpus id; the
+through dim-keyed aggregates (never collects it); the book is m*k rows,
+broadcast; encoding is one projection over the corpus; the
 approximate phase reuses the salted two-phase top-k (no per-query
 single-task sort); the exact phase touches k * rerank_factor rows per
 query. Code ids ride along in the output of ``pq_encode`` so a sink can
@@ -90,6 +95,15 @@ def _pool_and_rerank(
     )
 
 
+def _sub_dims(m: int, dims: int) -> int:
+    if dims % m != 0:
+        raise ValueError(
+            f"dims must divide evenly into m subspaces, got dims={dims}"
+            f" m={m}"
+        )
+    return dims // m
+
+
 def pq_fit_books(
     vectors: DataFrame,
     m: int = 2,
@@ -107,12 +121,7 @@ def pq_fit_books(
     the per-cluster per-dim mean codebook entry used for
     reconstruction. m*k tiny rows — the persistable fit/serve split for
     PQ, exactly as staged_centroids is for IVF."""
-    if dims % m != 0:
-        raise ValueError(
-            f"dims must divide evenly into m subspaces, got dims={dims}"
-            f" m={m}"
-        )
-    sub_dims = dims // m
+    sub_dims = _sub_dims(m, dims)
     pts = ensure_parallelism(
         vectors.select(
             F.col(id_col).alias("__id"),
@@ -161,197 +170,137 @@ def pq_fit_books(
     return reduce(lambda a, b: a.unionByName(b), parts)
 
 
+def _nearest_codes(
+    pts: DataFrame, books: DataFrame, m: int, n_clusters: int, sub_dims: int
+) -> DataFrame:
+    """``pts`` (any columns plus ``v``, the vector already as doubles:
+    ``checked_dims``) with ``__best`` appended: per subspace s, the
+    (d, cid, mean) struct of the book centroid nearest to v's slice s.
+
+    The m*k book is PARAMETER-sized, so the encode is one zero-shuffle
+    projection: the book broadcasts as a single bounded array row and
+    each corpus row folds the per-subspace argmin inside the expression.
+    Exactness is the assign_to_centroids contract verbatim: the same
+    _sq_dist fold on doubles, the same (d, lowest-cid) struct-min
+    tie-break per subspace, so argmin against ``cent`` reproduces the
+    training assignment. The m argmins render into ONE array column that
+    ``dq`` and ``codes`` both read: Catalyst does not share lambda
+    bodies, and rendering each argmin once per output column paid 2m
+    argmins per row."""
+    books_arr = books.groupBy().agg(
+        F.array_sort(
+            F.collect_list(
+                F.struct(
+                    F.col("sub").cast("int").alias("sub"),
+                    F.col("cid").cast("int").alias("cid"),
+                    F.transform(
+                        F.col("cent"), lambda x: x.cast("double")
+                    ).alias("cent"),
+                    F.transform(
+                        F.col("mean"), lambda x: x.cast("double")
+                    ).alias("mean"),
+                )
+            )
+        ).alias("books")
+    )
+    # loud-fail on an empty/truncated artifact, inside the consumed
+    # expression so Catalyst can't prune it (the assign_to_centroids
+    # guard idiom). The guard and the per-subspace split run once, on
+    # the one-row book side of the broadcast, not per corpus row.
+    # Authored as SQL expr strings (round-17, guide §7.3): the F-API
+    # built ~4 HOF lambdas per subspace at ~16 ms of py4j each — m=8
+    # (hires) paid ~0.5 s of plan build; the strings are the identical
+    # _sq_dist fold and (d, lowest-cid, mean) struct-min tie-break.
+    checked = (
+        f"CASE WHEN size(books) = {m * n_clusters} THEN books "
+        "ELSE CAST(raise_error('pq_encode: book must carry "
+        f"exactly {m * n_clusters} (sub, cid) rows') AS "
+        "ARRAY<STRUCT<sub: INT, cid: INT, "
+        "cent: ARRAY<DOUBLE>, mean: ARRAY<DOUBLE>>>) END"
+    )
+    by_sub = books_arr.selectExpr(
+        *(f"filter({checked}, b -> b.sub = {s}) AS __b{s}" for s in range(m))
+    )
+
+    def best_sql(s: int) -> str:
+        sub_v = f"slice(v, {s * sub_dims + 1}, {sub_dims})"
+        return (
+            f"array_min(transform(__b{s}, b -> named_struct("
+            f"'d', aggregate(zip_with({sub_v}, b.cent, "
+            "(x, y) -> (x - y) * (x - y)), 0.0D, "
+            "(acc, t) -> acc + t), "
+            "'cid', b.cid, 'mean', b.mean)))"
+        )
+
+    return pts.crossJoin(F.broadcast(by_sub)).withColumn(
+        "__best",
+        F.expr("array(" + ",".join(best_sql(s) for s in range(m)) + ")"),
+    )
+
+
 def pq_encode(
     vectors: DataFrame,
+    books: DataFrame,
     m: int = 2,
     dims: int = 64,
     n_clusters: int = 4,
-    kmeans_iter: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    books: DataFrame | None = None,
 ) -> DataFrame:
-    """Train ``m`` per-subspace codebooks and encode the corpus.
+    """Encode the corpus against a trained PQ book — the
+    (sub, cid, cent, mean) table ``pq_fit_books`` returns, in memory
+    within one build or read back from a staged artifact
+    (extensions/staging.py:staged_pq_books). ``m * n_clusters`` must
+    equal the book's row count; a short or empty book fails the job.
 
     Output: (id, v full-precision double vector, dq reconstructed
-    vector, codes array<int> of m codebook ids). Each subspace trains
-    the deterministic Lloyd quantizer on its slice; the codebook entry
-    is the per-cluster per-dimension mean of the FINAL assignment, and
-    ``dq`` concatenates the m entries back to a full-width vector.
-
-    Assembly avoids an m-way corpus self-join: the m per-subspace
-    assignment tables (each already joined to its broadcast k-row
-    codebook) UNION into one stream and fold back to one row per vector
-    with a single id-keyed groupBy — two corpus exchanges total
-    (union-fold + the join back to the full vectors) no matter how many
-    subspaces, where a join chain would pay m + 1."""
-    if dims % m != 0:
-        raise ValueError(
-            f"dims must divide evenly into m subspaces, got dims={dims}"
-            f" m={m}"
-        )
-    sub_dims = dims // m
+    vector, codes array<int> of m codebook ids). ``codes`` is each
+    subspace's argmin against the Lloyd centroids, which is the final
+    training assignment; ``dq`` concatenates the m mean-codebook entries
+    of those codes back to a full-width vector. One corpus scan, zero
+    corpus exchanges, whatever m is."""
+    sub_dims = _sub_dims(m, dims)
     pts = ensure_parallelism(
         vectors.select(
             F.col(id_col).alias("__id"),
             checked_dims(F.col(vec_col), dims, "pq_encode").alias("v"),
         )
     )
-    if books is not None:
-        # Staged path (round-16 rework): the m*k book is PARAMETER-
-        # sized, so the WHOLE encode collapses into one zero-shuffle
-        # projection — broadcast the book as a single bounded array
-        # row, and per corpus row fold the per-subspace argmin + mean
-        # lookup inside the expression. The previous shape assembled m
-        # assign_to_centroids parts (m corpus scans) through a
-        # union-fold + id join-back (2 corpus exchanges); at 100 TB
-        # with m=8 that is 8 scans and 2 shuffles the serving plan
-        # doesn't need. Exactness is the assign_to_centroids contract
-        # verbatim: same _sq_dist fold on doubles, same (d, lowest-cid)
-        # struct-min tie-break per subspace.
-        books_arr = books.groupBy().agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("sub").cast("int").alias("sub"),
-                        F.col("cid").cast("int").alias("cid"),
-                        F.transform(
-                            F.col("cent"), lambda x: x.cast("double")
-                        ).alias("cent"),
-                        F.transform(
-                            F.col("mean"), lambda x: x.cast("double")
-                        ).alias("mean"),
-                    )
-                )
-            ).alias("books")
-        )
-        # loud-fail on an empty/truncated artifact, inside the consumed
-        # expression so Catalyst can't prune it (the
-        # assign_to_centroids guard idiom). Authored as SQL expr strings
-        # (round-17, guide §7.3): the F-API built ~4 HOF lambdas per
-        # subspace at ~16 ms of py4j each — m=8 (hires) paid ~0.5 s of
-        # plan build here; the strings are the identical _sq_dist fold,
-        # (d, lowest-cid, mean) struct-min tie-break, guard and casts.
-        checked = (
-            f"CASE WHEN size(books) = {m * n_clusters} THEN books "
-            "ELSE CAST(raise_error('pq_encode: staged book must carry "
-            f"exactly {m * n_clusters} (sub, cid) rows') AS "
-            "ARRAY<STRUCT<sub: INT, cid: INT, "
-            "cent: ARRAY<DOUBLE>, mean: ARRAY<DOUBLE>>>) END"
-        )
-        vd = "transform(v, x -> CAST(x AS DOUBLE))"
-
-        def best_sql(s: int) -> str:
-            sub_v = f"slice({vd}, {s * sub_dims + 1}, {sub_dims})"
-            entries = f"filter({checked}, b -> b.sub = {s})"
-            return (
-                f"array_min(transform({entries}, b -> named_struct("
-                f"'d', aggregate(zip_with({sub_v}, b.cent, "
-                "(x, y) -> (x - y) * (x - y)), 0.0D, "
-                "(acc, t) -> acc + t), "
-                "'cid', b.cid, 'mean', b.mean)))"
-            )
-
-        return pts.crossJoin(F.broadcast(books_arr)).select(
-            F.col("__id").alias(id_col),
-            "v",
-            F.expr(
-                "concat("
-                + ",".join(f"{best_sql(s)}.mean" for s in range(m))
-                + ")"
-            ).alias("dq"),
-            F.expr(
-                "array("
-                + ",".join(
-                    f"CAST({best_sql(s)}.cid AS INT)" for s in range(m)
-                )
-                + ")"
-            ).alias("codes"),
-        )
-    parts = []
-    for s in range(m):
-        sub = pts.select(
-            "__id",
-            F.slice(F.col("v"), s * sub_dims + 1, sub_dims).alias("__sub"),
-        )
-        assigned, _ = kmeans_fit(
-            sub, k=n_clusters, max_iter=kmeans_iter,
-            id_col="__id", vec_col="__sub",
-            # see fit_books: small-k·d subspace fits keep the JVM fold
-            assign_kernel="jvm",
-        )
-        # codebook = per-cluster per-dim means of the final assignment
-        # (pure function of the assignment -> oracle-replayable)
-        book = (
-            assigned.select("cluster", F.posexplode("v").alias("dim", "x"))
-            .groupBy("cluster", "dim")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("cluster")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("dim", "m"))).alias("dm")
-            )
-            .select(
-                "cluster",
-                F.transform(F.col("dm"), lambda t: t["m"]).alias(f"__p{s}"),
-            )
-        )
-        parts.append(
-            assigned.select(F.col("vid").alias("__id"), "cluster")
-            .join(F.broadcast(book), "cluster")
-            .select(
-                "__id",
-                F.lit(s).alias("__sub"),
-                F.col("cluster").cast("int").alias("__code"),
-                F.col(f"__p{s}").alias("__p"),
-            )
-        )
-    recon = (
-        reduce(lambda a, b: a.unionByName(b), parts)
-        .groupBy("__id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("__sub", "__code", "__p"))
-            ).alias("__sp")
-        )
-        .select(
-            "__id",
-            F.flatten(F.transform("__sp", lambda t: t["__p"])).alias("dq"),
-            F.transform("__sp", lambda t: t["__code"]).alias("codes"),
-        )
-    )
-    return pts.join(recon, "__id").select(
-        F.col("__id").alias(id_col), "v", "dq", "codes"
+    return _nearest_codes(pts, books, m, n_clusters, sub_dims).select(
+        F.col("__id").alias(id_col),
+        "v",
+        F.expr("flatten(transform(__best, b -> b.mean))").alias("dq"),
+        F.expr("transform(__best, b -> b.cid)").alias("codes"),
     )
 
 
 def pq_topk(
     vectors: DataFrame,
     queries: DataFrame,
+    books: DataFrame,
     k: int = 5,
     m: int = 2,
     dims: int = 64,
     n_clusters: int = 4,
-    kmeans_iter: int = 2,
     rerank_factor: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
     num_salts: int = 32,
-    books: DataFrame | None = None,
 ) -> DataFrame:
-    """PQ ANN: rank on reconstructed-vector cosine, re-rank the top
-    ``k * rerank_factor`` pool per query with exact cosine. Output:
-    (query_id, neighbor_id, cos_sim, rank) — exact cosine on the
-    re-ranked winners, rank tie-broken by neighbor id."""
+    """PQ ANN over a trained book (see ``pq_encode``): rank on
+    reconstructed-vector cosine, re-rank the top ``k * rerank_factor``
+    pool per query with exact cosine. Output: (query_id, neighbor_id,
+    cos_sim, rank) — exact cosine on the re-ranked winners, rank
+    tie-broken by neighbor id."""
     if num_salts < 1:
         raise ValueError(f"num_salts must be >= 1, got {num_salts}")
     if rerank_factor < 1:
         raise ValueError(f"rerank_factor must be >= 1, got {rerank_factor}")
     enc = pq_encode(
-        vectors, m=m, dims=dims, n_clusters=n_clusters,
-        kmeans_iter=kmeans_iter, id_col=id_col, vec_col=vec_col,
-        books=books,
+        vectors, books, m=m, dims=dims, n_clusters=n_clusters,
+        id_col=id_col, vec_col=vec_col,
     ).select(F.col(id_col).alias("neighbor_id"), "v", "dq")
     # reconstruction norms fold once per corpus row, query norms once
     # per query: the full-corpus approx phase is one dot fold per pair
@@ -394,77 +343,56 @@ def pq_topk(
 def ivf_pq_topk(
     vectors: DataFrame,
     queries: DataFrame,
+    cluster_col: str,
+    books: DataFrame,
     k: int = 5,
     nprobe: int = 2,
-    n_clusters: int = 4,
-    kmeans_iter: int = 3,
     m: int = 2,
     dims: int = 64,
     pq_clusters: int = 4,
-    pq_iter: int = 2,
     rerank_factor: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
     num_salts: int = 32,
-    centroids: DataFrame | None = None,
-    books: DataFrame | None = None,
 ) -> DataFrame:
-    """IVF-PQ: the production ANN composition — a coarse k-means
-    quantizer routes each query to its ``nprobe`` nearest clusters
-    (bounding WHICH vectors are touched), and inside the probed
-    clusters candidates rank on the PQ-reconstructed approximation
-    (bounding the BYTES each touch costs: m code bytes instead of the
-    full vector), with exact-cosine re-ranking of the top
-    ``k * rerank_factor`` pool. The two quantizers are independent —
-    coarse routing trains on full vectors, PQ codebooks on subspaces —
-    exactly the IVF-PQ layout of a disk-resident vector index.
+    """IVF-PQ: the production ANN composition — a coarse quantizer
+    routes each query to its ``nprobe`` nearest clusters (bounding WHICH
+    vectors are touched), and inside the probed clusters candidates rank
+    on the PQ-reconstructed approximation (bounding the BYTES each touch
+    costs: m code bytes instead of the full vector), with exact-cosine
+    re-ranking of the top ``k * rerank_factor`` pool. The two quantizers
+    are independent — coarse routing trains on full vectors, PQ
+    codebooks on subspaces — exactly the IVF-PQ layout of a
+    disk-resident vector index.
+
+    Both arrive trained, as ``ivf_topk`` and ``pq_topk`` take them:
+    ``vectors`` carries its coarse cluster in ``cluster_col``
+    (a k-means fit in the build, or ``assign_to_centroids``), and
+    ``books`` is the ``pq_fit_books`` table with ``m * pq_clusters``
+    rows.
 
     Plan shape: representative table broadcast (routing), probe list
-    broadcast (tiny), corpus touched once via cluster-key equi join,
-    salted two-phase pool so no query funnels one task. Every stage is
-    the already-oracle-gated building block (kmeans_assign, pq_encode,
-    the SQ8 pool/re-rank idiom)."""
+    broadcast (tiny), corpus touched once via cluster-key equi join, the
+    encode a broadcast projection on that same pass, salted two-phase
+    pool so no query funnels one task."""
     if num_salts < 1:
         raise ValueError(f"num_salts must be >= 1, got {num_salts}")
     if rerank_factor < 1:
         raise ValueError(f"rerank_factor must be >= 1, got {rerank_factor}")
-    from timeseries_spark.extensions.kmeans import (
-        assign_to_centroids,
-        kmeans_assign,
-    )
-
-    if centroids is not None:
-        # staged coarse quantizer (see extensions/staging.py): the
-        # routing/blocking assignment is a broadcast argmin against the
-        # persisted centroid table — identical clusters, no Lloyd
-        # subtree. `books` stages the PQ half the same way below.
-        # Materialized ONCE (eager checkpoint): vecs_cl/reps and the
-        # encoded-corpus branch all consume it, and without the
-        # checkpoint the corpus-wide argmin projection re-executes per
-        # consumer (the kmeans_assign path below is already
-        # materialized by kmeans_fit's per-round checkpoints).
-        clusters = assign_to_centroids(
-            vectors, centroids, id_col=id_col, vec_col=vec_col
-        ).localCheckpoint(eager=True)
-    else:
-        clusters = kmeans_assign(
-            vectors, k=n_clusters, max_iter=kmeans_iter,
-            id_col=id_col, vec_col=vec_col,
-        )
-    vecs_cl = vectors.join(clusters.select(id_col, "cluster"), id_col)
+    sub_dims = _sub_dims(m, dims)
     reps = (
-        vecs_cl.groupBy("cluster")
+        vectors.groupBy(cluster_col)
         .agg(F.min(id_col).alias("rep_id"))
         .join(
-            vecs_cl.select(
+            vectors.select(
                 F.col(id_col).alias("rep_id"),
                 as_double(F.col(vec_col)).alias("rep_vec"),
             ),
             "rep_id",
         )
-        .select("cluster", "rep_vec")
+        .select(F.col(cluster_col).alias("cluster"), "rep_vec")
     )
     qs = queries.select(
         F.col(query_id_col).alias("query_id"),
@@ -484,19 +412,27 @@ def ivf_pq_topk(
         .filter(F.col("rr") <= nprobe)
         .select("query_id", "q", "nq", "cluster")
     )
-    enc = pq_encode(
-        vectors, m=m, dims=dims, n_clusters=pq_clusters,
-        kmeans_iter=pq_iter, id_col=id_col, vec_col=vec_col,
-        books=books,
-    ).select(F.col(id_col), "v", "dq")
-    encc = enc.join(clusters.select(id_col, "cluster"), id_col)
+    # no ensure_parallelism here: the clustered corpus is a join, and
+    # asking an adaptive plan for its partition count runs its stages
+    # as an extra job at build time
+    pts = vectors.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(cluster_col).alias("cluster"),
+        checked_dims(F.col(vec_col), dims, "ivf_pq_topk").alias("v"),
+    )
+    encc = _nearest_codes(pts, books, m, pq_clusters, sub_dims).select(
+        "neighbor_id",
+        "cluster",
+        "v",
+        F.expr("flatten(transform(__best, b -> b.mean))").alias("dq"),
+    )
     scored = (
         encc.withColumn("ndq", l2_norm(F.col("dq")))
         .join(F.broadcast(probe), "cluster")
-        .filter(F.col(id_col) != F.col("query_id"))
+        .filter(F.col("neighbor_id") != F.col("query_id"))
         .select(
             "query_id",
-            F.col(id_col).alias("neighbor_id"),
+            "neighbor_id",
             "v",
             "q",
             "nq",
@@ -506,7 +442,9 @@ def ivf_pq_topk(
                 ),
                 6,
             ).alias("approx_sim"),
-            F.pmod(F.hash(F.col(id_col)), F.lit(num_salts)).alias("__salt"),
+            F.pmod(F.hash(F.col("neighbor_id")), F.lit(num_salts)).alias(
+                "__salt"
+            ),
         )
     )
     return _pool_and_rerank(scored, k, rerank_factor)

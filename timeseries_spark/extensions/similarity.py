@@ -277,60 +277,31 @@ def embedding_near_dup(
 def ivf_topk(
     vectors: DataFrame,
     queries: DataFrame,
+    cluster_col: str,
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cluster_col: str | None = None,
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
     nprobe: int = 1,
-    n_clusters: int = 4,
-    kmeans_iter: int = 3,
-    centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF search: route each query to its ``nprobe`` nearest cluster
     representatives, then brute-force only inside those clusters —
     ``nprobe`` is the recall/cost knob (probe cost scales linearly,
     recall approaches brute-force).
 
-    By default (``cluster_col=None``) the inverted file is built by the
-    TRAINED deterministic k-means quantizer (extensions/kmeans.py,
-    ``n_clusters``/``kmeans_iter``) — the production path. Pass an
-    existing column (e.g. a precomputed partition label) to skip
-    training: that variant is the deterministic test hook and the
-    escape hatch for corpora with a natural partitioning.
+    ``vectors`` already carries its inverted-file label in
+    ``cluster_col``: the probe never trains. The label comes from the
+    trained quantizer — a k-means fit inside the build
+    (extensions/kmeans.py), or ``assign_to_centroids`` against a staged
+    centroid table (extensions/staging.py), which reproduces the same
+    assignment — or from a natural partitioning of the corpus. A caller sweeping
+    ``nprobe`` fits once and probes many times.
 
     The representative table is tiny (one row per cluster) and broadcast
     twice (routing + probe); the big vector table is touched once with a
     cluster-key equi join — this is the plan shape that survives a 1000×
-    corpus: no all-pairs, no global shuffle of the vectors (the
-    quantizer fit likewise reduces the corpus through a dim-keyed
-    aggregate per round, never collecting it)."""
-    if centroids is not None:
-        # staged-quantizer probe path (round-6 verdict's `weak` fix):
-        # the caller hands a pre-trained (cid, c) table — typically a
-        # k-row parquet read via extensions/staging.staged_centroids —
-        # and assignment is a zero-shuffle broadcast argmin projection.
-        # No Lloyd subtree anywhere in this plan.
-        from timeseries_spark.extensions.kmeans import assign_to_centroids
-
-        clusters = assign_to_centroids(
-            vectors, centroids, id_col=id_col, vec_col=vec_col
-        )
-        vectors = vectors.join(clusters.select(id_col, "cluster"), id_col)
-        cluster_col = "cluster"
-    elif cluster_col is None:
-        from timeseries_spark.extensions.kmeans import kmeans_assign
-
-        clusters = kmeans_assign(
-            vectors,
-            k=n_clusters,
-            max_iter=kmeans_iter,
-            id_col=id_col,
-            vec_col=vec_col,
-        )
-        vectors = vectors.join(clusters.select(id_col, "cluster"), id_col)
-        cluster_col = "cluster"
+    corpus: no all-pairs, no global shuffle of the vectors."""
     reps = (
         vectors.groupBy(cluster_col)
         .agg(F.min(id_col).alias("rep_id"))

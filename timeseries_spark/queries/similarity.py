@@ -23,6 +23,18 @@ _COS = (
 )
 
 
+def _ivf_clustered(emb, clusters=None):
+    """The corpus with its coarse quantizer's ``cluster`` joined on —
+    the input every IVF probe takes. ``clusters`` defaults to the
+    in-build fit every IVF oracle replays (k=4, 3 Lloyd rounds); staged
+    callers pass ``assign_to_centroids`` output, the same assignment."""
+    if clusters is None:
+        from timeseries_spark.extensions.kmeans import kmeans_assign
+
+        clusters = kmeans_assign(emb, k=4, max_iter=3)
+    return emb.join(clusters.select("vec_id", "cluster"), "vec_id")
+
+
 def _queries_df(spark, sf_dir, n: int = 8):
     emb = load(spark, sf_dir, "embeddings")
     return emb.filter(F.col("vec_id") < n).select(
@@ -96,7 +108,7 @@ def ann_ivf_nprobe2(spark, sf_dir):
     touched only through cluster-key equi joins."""
     emb = load(spark, sf_dir, "embeddings")
     return ivf_topk(
-        emb, _queries_df(spark, sf_dir), k=5, cluster_col="label", nprobe=2
+        emb, _queries_df(spark, sf_dir), "label", k=5, nprobe=2
     )
 
 
@@ -298,15 +310,17 @@ def _ivf_kmeans_oracle(nprobe: int) -> str:
 
 @query("ann_ivf_topk", oracle=_ivf_kmeans_oracle(nprobe=1))
 def ann_ivf_topk(spark, sf_dir):
-    """IVF(nprobe=1) top-5 on the DEFAULT path — the trained k-means
+    """IVF(nprobe=1) top-5, trained in the build — the k-means
     quantizer (k=4, 3 deterministic Lloyd rounds) builds the inverted
-    file inside ivf_topk itself; each query routes to its nearest
-    cluster representative (min-id member) and probes only that cluster.
+    file, then ivf_topk routes each query to its nearest cluster
+    representative (min-id member) and probes only that cluster.
     The 100TB plan shape: representative table broadcast, vector table
     touched once via cluster-key equi join, quantizer fit reduces
     through dim-keyed aggregates."""
     emb = load(spark, sf_dir, "embeddings")
-    return ivf_topk(emb, _queries_df(spark, sf_dir), k=5)
+    return ivf_topk(
+        _ivf_clustered(emb), _queries_df(spark, sf_dir), "cluster", k=5
+    )
 
 
 @query("ann_ivf_kmeans", oracle=_ivf_kmeans_oracle(nprobe=2))
@@ -317,16 +331,9 @@ def ann_ivf_kmeans(spark, sf_dir):
     cluster representatives and brute-forces only inside them — the full
     production composition (quantizer → inverted file → probe), every
     stage replayed exactly by the DuckDB oracle."""
-    from timeseries_spark.extensions.kmeans import kmeans_assign
-
     emb = load(spark, sf_dir, "embeddings")
-    clusters = kmeans_assign(emb, k=4, max_iter=3)
-    vecs = emb.join(clusters.select("vec_id", "cluster"), "vec_id")
     return ivf_topk(
-        vecs,
-        _queries_df(spark, sf_dir),
-        k=5,
-        cluster_col="cluster",
+        _ivf_clustered(emb), _queries_df(spark, sf_dir), "cluster", k=5,
         nprobe=2,
     )
 
@@ -843,12 +850,13 @@ def ann_pq_topk(spark, sf_dir):
     per-query pool is re-ranked with exact cosine. The oracle replays
     subspace training, codebook means, reconstruction, pool, and
     re-rank exactly."""
-    from timeseries_spark.extensions.pq import pq_topk
+    from timeseries_spark.extensions.pq import pq_fit_books, pq_topk
 
     emb = load(spark, sf_dir, "embeddings")
+    books = pq_fit_books(emb, m=2, dims=64, n_clusters=4, kmeans_iter=2)
     return pq_topk(
-        emb, _queries_df(spark, sf_dir), k=5, m=2, dims=64,
-        n_clusters=4, kmeans_iter=2, rerank_factor=4,
+        emb, _queries_df(spark, sf_dir), books, k=5, m=2, dims=64,
+        n_clusters=4, rerank_factor=4,
     )
 
 
@@ -867,12 +875,13 @@ def ann_pq_hires(spark, sf_dir):
     pool. Same deterministic Lloyd codebooks, 6dp rounds, and
     (sim desc, id) tie-breaks as ann_pq_topk — the oracle replays all
     eight subspace trainings, reconstruction, pool, and exact rerank."""
-    from timeseries_spark.extensions.pq import pq_topk
+    from timeseries_spark.extensions.pq import pq_fit_books, pq_topk
 
     emb = load(spark, sf_dir, "embeddings")
+    books = pq_fit_books(emb, m=8, dims=64, n_clusters=4, kmeans_iter=2)
     return pq_topk(
-        emb, _queries_df(spark, sf_dir), k=5, m=8, dims=64, n_clusters=4,
-        kmeans_iter=2, rerank_factor=12,
+        emb, _queries_df(spark, sf_dir), books, k=5, m=8, dims=64,
+        n_clusters=4, rerank_factor=12,
     )
 
 
@@ -949,13 +958,13 @@ def ann_ivf_pq(spark, sf_dir):
     full embedding), and the 20-wide pool re-ranks with exact cosine.
     Both quantizers, routing, pooling, and re-rank replay exactly in
     the oracle."""
-    from timeseries_spark.extensions.pq import ivf_pq_topk
+    from timeseries_spark.extensions.pq import ivf_pq_topk, pq_fit_books
 
     emb = load(spark, sf_dir, "embeddings")
+    books = pq_fit_books(emb, m=2, dims=64, n_clusters=4, kmeans_iter=2)
     return ivf_pq_topk(
-        emb, _queries_df(spark, sf_dir), k=5, nprobe=2, n_clusters=4,
-        kmeans_iter=3, m=2, dims=64, pq_clusters=4, pq_iter=2,
-        rerank_factor=4,
+        _ivf_clustered(emb), _queries_df(spark, sf_dir), "cluster", books,
+        k=5, nprobe=2, m=2, dims=64, pq_clusters=4, rerank_factor=4,
     )
 
 
@@ -970,13 +979,15 @@ def ann_ivf_staged(spark, sf_dir):
     assign_to_centroids), then routing + probe as in ann_ivf_topk.
     Output is hash-identical to ann_ivf_topk (same oracle): staging
     changes WHEN the quantizer trains, never what it answers."""
+    from timeseries_spark.extensions.kmeans import assign_to_centroids
     from timeseries_spark.extensions.staging import staged_centroids
 
     emb = load(spark, sf_dir, "embeddings")
     cents = staged_centroids(
         spark, emb, f"{sf_dir}/embeddings.parquet", k=4, max_iter=3
     )
-    return ivf_topk(emb, _queries_df(spark, sf_dir), k=5, centroids=cents)
+    vecs = _ivf_clustered(emb, assign_to_centroids(emb, cents))
+    return ivf_topk(vecs, _queries_df(spark, sf_dir), "cluster", k=5)
 
 
 @query(
@@ -1427,8 +1438,8 @@ def ann_pq_staged(spark, sf_dir):
         m=2, dims=64, n_clusters=4, kmeans_iter=2,
     )
     return pq_topk(
-        emb, _queries_df(spark, sf_dir), k=5, m=2, dims=64,
-        n_clusters=4, kmeans_iter=2, rerank_factor=4, books=books,
+        emb, _queries_df(spark, sf_dir), books, k=5, m=2, dims=64,
+        n_clusters=4, rerank_factor=4,
     )
 
 
@@ -1454,8 +1465,8 @@ def ann_pq_hires_staged(spark, sf_dir):
         m=8, dims=64, n_clusters=4, kmeans_iter=2,
     )
     return pq_topk(
-        emb, _queries_df(spark, sf_dir), k=5, m=8, dims=64,
-        n_clusters=4, kmeans_iter=2, rerank_factor=12, books=books,
+        emb, _queries_df(spark, sf_dir), books, k=5, m=8, dims=64,
+        n_clusters=4, rerank_factor=12,
     )
 
 
@@ -1467,6 +1478,7 @@ def ann_ivf_pq_staged(spark, sf_dir):
     (centroid, mean-codebook) subspace tables, and the per-query plan
     contains no training anywhere. Hash-identical to ann_ivf_pq (same
     oracle)."""
+    from timeseries_spark.extensions.kmeans import assign_to_centroids
     from timeseries_spark.extensions.pq import ivf_pq_topk
     from timeseries_spark.extensions.staging import (
         staged_centroids,
@@ -1479,10 +1491,15 @@ def ann_ivf_pq_staged(spark, sf_dir):
     books = staged_pq_books(
         spark, emb, src, m=2, dims=64, n_clusters=4, kmeans_iter=2
     )
+    # materialized ONCE (eager checkpoint): the probe reads the clustered
+    # corpus twice (routing representatives, encoded candidates), and
+    # without the checkpoint the corpus-wide argmin projection
+    # re-executes per consumer (an in-build kmeans_assign is already
+    # materialized by kmeans_fit's checkpoints)
+    clusters = assign_to_centroids(emb, cents).localCheckpoint(eager=True)
     return ivf_pq_topk(
-        emb, _queries_df(spark, sf_dir), k=5, nprobe=2, n_clusters=4,
-        kmeans_iter=3, m=2, dims=64, pq_clusters=4, pq_iter=2,
-        rerank_factor=4, centroids=cents, books=books,
+        _ivf_clustered(emb, clusters), _queries_df(spark, sf_dir), "cluster",
+        books, k=5, nprobe=2, m=2, dims=64, pq_clusters=4, rerank_factor=4,
     )
 
 
@@ -1715,14 +1732,16 @@ def ann_recall_frontier(spark, sf_dir):
     turning the accuracy/cost trade into one oracle-gated table
     (ann_recall_report pins the shipped operating points; this pins the
     CURVE around them, so a knob regression shows up as a hash change).
-    Ground truth is checkpointed once; every sweep point is the shipped
-    extension callable with the swept parameter plus one bounded
-    semi-join + single-row aggregate."""
-    from timeseries_spark.extensions.pq import pq_topk
+    Ground truth is checkpointed once; the IVF quantizer is fit once
+    and probed at every nprobe (each PQ point trains its own subspaces);
+    every sweep point is the shipped extension callable with the swept
+    parameter plus one bounded semi-join + single-row aggregate."""
+    from timeseries_spark.extensions.pq import pq_fit_books, pq_topk
     from timeseries_spark.extensions.similarity import hyperplane_lsh_topk
 
     emb = load(spark, sf_dir, "embeddings")
     qs = _queries_df(spark, sf_dir)
+    ivf_vecs = _ivf_clustered(emb)
     truth = (
         brute_force_topk(emb, qs, k=5)
         .select("query_id", "neighbor_id")
@@ -1736,10 +1755,13 @@ def ann_recall_frontier(spark, sf_dir):
                 emb, qs, k=5, n_planes=param, dims=64
             )
         if tier == "ivf":
-            return ivf_topk(emb, qs, k=5, nprobe=param)
+            return ivf_topk(ivf_vecs, qs, "cluster", k=5, nprobe=param)
+        books = pq_fit_books(
+            emb, m=param, dims=64, n_clusters=4, kmeans_iter=2
+        )
         return pq_topk(
-            emb, qs, k=5, m=param, dims=64, n_clusters=4,
-            kmeans_iter=2, rerank_factor=4,
+            emb, qs, books, k=5, m=param, dims=64, n_clusters=4,
+            rerank_factor=4,
         )
 
     rows = None

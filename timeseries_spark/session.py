@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -52,3 +52,12 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def explain(df: DataFrame) -> str:
+    """``df``'s formatted-mode explain string. Every node appears twice
+    in it (tree line + detail header), so raw substring counts of a node
+    name are twice the node count."""
+    return df.sparkSession._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )

@@ -23,11 +23,12 @@ from __future__ import annotations
 
 import json
 import statistics
+import os
 import sys
 import time
 from concurrent.futures import ThreadPoolExecutor
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:

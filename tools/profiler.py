@@ -154,12 +154,10 @@ def profile_query(spark, tracer, name: str, fn, sf_dir: str, plans=None):
         ph["tasks"] += r["tasks"]
         ph["task_s"] = round(ph["task_s"] + r["task_s"], 3)
     if plans:
+        from timeseries_spark.session import explain
+
         with open(os.path.join(plans, f"{name}.txt"), "w") as f:
-            f.write(
-                sc._jvm.PythonSQLUtils.explainString(
-                    df._jdf.queryExecution(), "formatted"
-                )
-            )
+            f.write(explain(df))
     return {
         "wall_s": round(exe.end - build.start, 3),
         "build_s": round(build.end - build.start, 3),
@@ -188,11 +186,8 @@ def main() -> None:
 
     from perfbench.tracing import Tracer
     from timeseries_spark.queries import all_queries
-    from timeseries_spark.session import get_spark
-
-    # after the engine: bench.py puts a fixed checkout path first on
-    # sys.path, which must not decide which tree is profiled
     from bench import HEADLINE
+    from timeseries_spark.session import get_spark
 
     spark = get_spark("profile")
     registry = all_queries()

@@ -24,10 +24,11 @@ Prints one JSON line per operator: {name, t1, tN, ratio}.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -124,9 +125,7 @@ def main() -> None:
         def run():
             clusters = kmeans_assign(v, k=4, max_iter=3)
             routed = v.join(clusters.select("vec_id", "cluster"), "vec_id")
-            ivf_topk(
-                routed, queries, k=5, cluster_col="cluster", nprobe=2
-            ).count()
+            ivf_topk(routed, queries, "cluster", k=5, nprobe=2).count()
         return run
 
     t1 = time_warm(ivf(vecs1))
@@ -353,7 +352,10 @@ def main() -> None:
     # broadcast argmin against PRE-STAGED centroids (fit off the clock,
     # as production would) — probe cost scales with the probed cluster,
     # not with quantizer training.
-    from timeseries_spark.extensions.kmeans import kmeans_fit
+    from timeseries_spark.extensions.kmeans import (
+        assign_to_centroids,
+        kmeans_fit,
+    )
 
     def ivf_staged(v):
         _, cents = kmeans_fit(v, k=4, max_iter=3, id_col="vec_id",
@@ -361,7 +363,9 @@ def main() -> None:
         cents = cents.localCheckpoint(eager=True)
 
         def run():
-            ivf_topk(v, queries, k=5, centroids=cents).count()
+            clusters = assign_to_centroids(v, cents)
+            routed = v.join(clusters.select("vec_id", "cluster"), "vec_id")
+            ivf_topk(routed, queries, "cluster", k=5).count()
 
         return run
 
