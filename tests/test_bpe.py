@@ -123,8 +123,6 @@ def test_disjoint_prefix_respects_remaining_cap():
 
 
 def test_batched_equals_sequential_on_fixture(spark):
-    from timeseries_spark.extensions.bpe import induce_bpe, induce_bpe_batched
-
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(
             ["abab abab abc", "abc ab a b", "baba abab cc cc"] * 2
@@ -132,8 +130,8 @@ def test_batched_equals_sequential_on_fixture(spark):
         "doc_id bigint, text string",
     )
     for bm in (1, 2, 16):
-        seq_m, seq_w = induce_bpe(docs, n_merges=5)
-        bat_m, bat_w = induce_bpe_batched(docs, n_merges=5, batch_max=bm)
+        seq_m, seq_w = induce_bpe(docs, n_merges=5, batch_max=1)
+        bat_m, bat_w = induce_bpe(docs, n_merges=5, batch_max=bm)
         assert sorted(map(tuple, seq_m.collect())) == sorted(
             map(tuple, bat_m.collect())
         ), f"batch_max={bm}"
@@ -143,10 +141,54 @@ def test_batched_equals_sequential_on_fixture(spark):
 
 
 def test_batched_validates(spark):
-    from timeseries_spark.extensions.bpe import induce_bpe_batched
-
     docs = spark.createDataFrame([(0, "ab")], "doc_id bigint, text string")
     with pytest.raises(ValueError):
-        induce_bpe_batched(docs, n_merges=0)
+        induce_bpe(docs, n_merges=0)
     with pytest.raises(ValueError):
-        induce_bpe_batched(docs, n_merges=1, batch_max=0)
+        induce_bpe(docs, n_merges=1, batch_max=0)
+
+
+def test_disjoint_prefix_earlier_mints_ends_batch_after_collision():
+    from timeseries_spark.extensions.bpe import _disjoint_prefix
+
+    # a truncated window (batch_max + 1 rows) cannot show every pair;
+    # the minted string "cd" is also an earlier mint of the induction,
+    # so it may already exist as a symbol and inflate (x, cd) pairs:
+    # the batch ends right after the member that mints it
+    rows = _rows(("a", "b", 10), ("c", "d", 9), ("e", "f", 8), ("g", "h", 7))
+    batch = _disjoint_prefix(rows, 3, 99, earlier_mints={"cd", "zz"})
+    assert [(r["a"], r["b"]) for r in batch] == [("a", "b"), ("c", "d")]
+    # no earlier mint collides: the whole disjoint prefix is kept
+    batch = _disjoint_prefix(rows, 3, 99, earlier_mints={"zz"})
+    assert [(r["a"], r["b"]) for r in batch] == [
+        ("a", "b"),
+        ("c", "d"),
+        ("e", "f"),
+    ]
+    # without earlier mints a truncated window stays conservative
+    batch = _disjoint_prefix(rows, 3, 99)
+    assert [(r["a"], r["b"]) for r in batch] == [("a", "b")]
+
+
+def test_select_batch_one_action_per_round(spark):
+    from timeseries_spark.extensions.bpe import select_batch
+
+    # a multi-merge round over a window that cannot show every pair:
+    # the batch must be decided from the one top-N collect alone
+    pc = spark.createDataFrame(
+        [("a", "b", 10), ("c", "d", 9), ("e", "f", 8), ("g", "h", 7),
+         ("i", "j", 6), ("k", "l", 5)],
+        "a string, b string, total bigint",
+    )
+    jsc = spark.sparkContext._jsc.sc()
+    store = spark._jsparkSession.sharedState().statusStore()
+    jsc.listenerBus().waitUntilEmpty()
+    before = store.executionsCount()
+    batch = select_batch(pc, 3, 99, set())
+    jsc.listenerBus().waitUntilEmpty()
+    assert store.executionsCount() - before == 1
+    assert [(r["a"], r["b"]) for r in batch] == [
+        ("a", "b"),
+        ("c", "d"),
+        ("e", "f"),
+    ]

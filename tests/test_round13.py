@@ -134,14 +134,14 @@ def test_bpe_batched_equals_sequential_on_steal_corpus(spark):
     # end-to-end pin of the counterexample corpus: batched induction
     # must reproduce sequential greedy's merge table exactly even
     # though round 1 is a pure count-tie plateau
-    from timeseries_spark.extensions.bpe import induce_bpe, induce_bpe_batched
+    from timeseries_spark.extensions.bpe import induce_bpe
 
     docs = spark.createDataFrame(
         [(i, "az zy yq") for i in range(9)] + [(100 + i, "cc dd") for i in range(9)],
         "doc_id bigint, text string",
     )
-    seq_m, seq_w = induce_bpe(docs, n_merges=6)
-    bat_m, bat_w = induce_bpe_batched(docs, n_merges=6, batch_max=8)
+    seq_m, seq_w = induce_bpe(docs, n_merges=6, batch_max=1)
+    bat_m, bat_w = induce_bpe(docs, n_merges=6, batch_max=8)
     assert sorted(map(tuple, seq_m.collect())) == sorted(
         map(tuple, bat_m.collect())
     )

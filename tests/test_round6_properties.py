@@ -63,7 +63,7 @@ def test_bpe_matches_sequential_reference(spark, corpus):
         [(i, t) for i, t in enumerate(corpus)], "doc_id bigint, text string"
     )
     want_merges, want_words = _bpe_reference(corpus, 3)
-    got_m, got_w = induce_bpe(docs, n_merges=3)
+    got_m, got_w = induce_bpe(docs, n_merges=3, batch_max=1)
     got_merges = [
         (r["step"], r["pair_left"], r["pair_right"], r["merged"], r["pair_count"])
         for r in got_m.orderBy("step").collect()
@@ -146,13 +146,13 @@ def test_batched_bpe_matches_sequential_reference(spark, corpus, bm):
     widths (round 11 widens the sampled widths to the 64/256 regime
     the production-depth vocabulary run uses; a deeper merge budget
     exercises multi-round batching at every width)."""
-    from timeseries_spark.extensions.bpe import induce_bpe_batched
+    from timeseries_spark.extensions.bpe import induce_bpe
 
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(corpus)], "doc_id bigint, text string"
     )
     want_merges, want_words = _bpe_reference(corpus, 12)
-    got_m, got_w = induce_bpe_batched(docs, n_merges=12, batch_max=bm)
+    got_m, got_w = induce_bpe(docs, n_merges=12, batch_max=bm)
     got_merges = [
         (r["step"], r["pair_left"], r["pair_right"], r["merged"], r["pair_count"])
         for r in got_m.orderBy("step").collect()

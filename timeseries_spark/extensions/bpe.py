@@ -10,14 +10,16 @@ to text is the tokenizer.
 Scale shape — the part that matters at 100 TB: the corpus is scanned
 ONCE to build the (token, count) vocabulary; every merge round after
 that runs at VOCABULARY grain (pair counting shuffles |vocab|·avg_len
-rows with map-side partial aggregation, the winning pairs are a bounded
-TakeOrdered collect back — bounded metadata, never corpus data — and
-the merge rewrite is a per-row literal string replace folded lazily
-into the next round's plan). Rounds follow the ``kmeans_fit`` /
-``connected_components`` discipline: a bounded driver loop whose state
-is eagerly ``localCheckpoint``-ed every few rounds so the plan never
-grows past a constant (plan-size blowup, not data, is the failure mode
-of chained iterations) while per-round driver jobs stay at one.
+rows with map-side partial aggregation, the top batch_max + 1 pairs
+come back as ONE bounded TakeOrdered collect — bounded metadata, never
+corpus data — and the driver validates the longest exact batch of
+merges from that window alone, with no second job; the batch rewrite is
+a per-row literal string replace folded lazily into the next round's
+plan). Rounds follow the ``kmeans_fit`` / ``connected_components``
+discipline: a bounded driver loop whose state is eagerly
+``localCheckpoint``-ed every few rounds so the plan never grows past a
+constant (plan-size blowup, not data, is the failure mode of chained
+iterations) while per-round driver actions stay at one.
 
 Determinism: ties on pair count break lexicographically on (left,
 right), so the same corpus always yields the same merge table — which
@@ -78,25 +80,6 @@ def _pair_counts(words: DataFrame) -> DataFrame:
     )
 
 
-def induce_bpe(
-    docs: DataFrame, n_merges: int, text_col: str = "text"
-) -> tuple[DataFrame, DataFrame]:
-    """Train ``n_merges`` BPE merges on the corpus, one merge per round
-    (sequential greedy BPE: ``induce_bpe_batched`` with ``batch_max=1``).
-    Returns ``(merges, words)``:
-
-    - merges: (step, pair_left, pair_right, merged, pair_count) — the
-      ordered merge table, the tokenizer artifact;
-    - words: (token, cnt, s) — the final vocabulary segmentation under
-      those merges (bracket rendering).
-
-    Stops early (fewer rows in ``merges``) if the vocabulary runs out
-    of adjacent pairs — single-character words can exhaust a toy corpus
-    before ``n_merges`` rounds.
-    """
-    return induce_bpe_batched(docs, n_merges, text_col, batch_max=1)
-
-
 def segment_topk(words: DataFrame, k: int = 50) -> DataFrame:
     """The k most frequent tokens with their final BPE segmentation —
     the human-inspectable artifact (did the tokenizer learn 'the' as
@@ -109,7 +92,12 @@ def segment_topk(words: DataFrame, k: int = 50) -> DataFrame:
     )
 
 
-def _disjoint_prefix(rows, batch_max: int, remaining: int, probe=None):
+def _disjoint_prefix(
+    rows,
+    batch_max: int,
+    remaining: int,
+    earlier_mints: set[str] | None = None,
+):
     """The exactness-preserving batch: the longest PREFIX of the
     (total desc, a, b)-ordered pair list that is pairwise
     symbol-disjoint, truncated at the first member the minted-output
@@ -170,14 +158,19 @@ def _disjoint_prefix(rows, batch_max: int, remaining: int, probe=None):
     batch therefore stops right after the first member whose minted
     output appears as a component of any existing pair.
 
-    ``probe(c, minted)`` is the lazy exact resolver for windows that
-    were truncated by limit(batch_max+1): it returns
-    (set of left symbols holding a count-c pair, subset of ``minted``
-    appearing as a component of any existing pair) from one tiny
-    vocab-grain aggregate. When the window provably contains the
-    relevant rows, both sets come from the window and the probe is
-    never called; probe-less callers (unit fixtures) fall back to
-    single-merge on unprovable ties.
+    The window is ONE collect of the top batch_max + 1 rows. When it
+    holds every pair (fewer rows than requested) both checks read it
+    directly. When it is truncated, count-c left symbols beyond it are
+    unknown, so any lex-earlier kept mint is assumed to steal; and the
+    collision check reads ``earlier_mints``, the strings minted by
+    earlier merges of the same induction: every symbol longer than one
+    character was minted by such a merge, so a minted string that
+    already exists as a symbol is one of them, and "minted ∩
+    earlier_mints" covers every real collision. Both fallbacks are
+    conservative — every prefix of an exact batch is exact, so they
+    shorten rounds and never change the merge table. Without
+    ``earlier_mints`` (unit fixtures) a truncated window ends the batch
+    after its first member.
     """
     rows = list(rows)
     batch: list = []
@@ -207,7 +200,7 @@ def _disjoint_prefix(rows, batch_max: int, remaining: int, probe=None):
         mints.add(m)
     if len(batch) <= 1:
         return batch  # single merge == plain greedy, exact by definition
-    minted = [r["a"] + r["b"] for r in batch]
+    minted = {r["a"] + r["b"] for r in batch}
     c = nxt["total"] if nxt is not None else None
     # completeness of the collected window: all pairs are visible iff
     # limit(batch_max+1) returned fewer rows than requested; all
@@ -217,37 +210,21 @@ def _disjoint_prefix(rows, batch_max: int, remaining: int, probe=None):
     ties_visible = all_pairs_visible or (
         c is not None and rows[-1]["total"] < c
     )
-    resolved: tuple[set, set] | None = None
-
-    def _resolve() -> tuple[set, set]:
-        nonlocal resolved
-        if resolved is None:
-            if probe is not None:
-                lefts, coll = probe(c, minted)
-                resolved = (set(lefts), set(coll))
-            else:
-                resolved = (None, None)  # unknowable -> conservative
-        return resolved
-
-    def tie_lefts() -> set | None:
-        if ties_visible:
-            return {r["a"] for r in rows if r["total"] == c}
-        return _resolve()[0]
-
-    def colliding() -> set | None:
-        if all_pairs_visible:
-            ms = set(minted)
-            return {
-                s for r in rows for s in (r["a"], r["b"]) if s in ms
-            }
-        return _resolve()[1]
+    tie_lefts = (
+        {r["a"] for r in rows if r["total"] == c} if ties_visible else None
+    )
+    if all_pairs_visible:
+        colliding = {s for r in rows for s in (r["a"], r["b"]) if s in minted}
+    elif earlier_mints is not None:
+        colliding = minted & earlier_mints
+    else:
+        colliding = None  # unknowable -> conservative
 
     def may_steal(k) -> bool:
         # (ab, y) can only reach count c if an OLD pair (b, y) holds
         # count exactly c (the new pair's occurrences are a subset of
         # the old pair's): a steal needs a count-c successor of b
-        lefts = tie_lefts()
-        return lefts is None or k["b"] in lefts
+        return tie_lefts is None or k["b"] in tie_lefts
 
     kept: list = []
     for r in batch:
@@ -260,57 +237,53 @@ def _disjoint_prefix(rows, batch_max: int, remaining: int, probe=None):
         ):
             break
         kept.append(r)
-        coll = colliding()
-        if coll is None or r["a"] + r["b"] in coll:
+        if colliding is None or r["a"] + r["b"] in colliding:
             # p_i's own merge is still the i-th sequential pick; the
             # inflated (x, a_ib_i) pairs only compete with LATER slots
             break
     return kept
 
 
-def select_batch(pc: DataFrame, batch_max: int, remaining: int) -> list:
+def select_batch(
+    pc: DataFrame, batch_max: int, remaining: int, earlier_mints: set[str]
+) -> list:
     """One batched round's merge selection over a pair-count DataFrame:
-    collect the top (batch_max + 1) window, run ``_disjoint_prefix``
-    with the lazy exact probe. The probe is one extra vocab-grain
-    aggregate fired only on rounds the window can't decide (boundary
-    count-tie wider than the window, or a possible mint collision below
-    it) — the same bounded metadata-only collect discipline as the
-    window itself: count-c left symbols and colliding minted strings
-    are both bounded by the symbol vocabulary, never the corpus."""
+    ONE bounded collect of the top (batch_max + 1) (a, b, total) rows,
+    then ``_disjoint_prefix`` validates the exact batch on the driver
+    from that window and ``earlier_mints`` (the strings minted by this
+    induction's earlier merges) — one DataFrame action per round, no
+    second job."""
     top = (
         pc.orderBy(F.desc("total"), "a", "b").limit(batch_max + 1).collect()
     )
-    if not top:
-        return []
-
-    def probe(c, minted, pc=pc):
-        cond = F.col("a").isin(list(minted)) | F.col("b").isin(list(minted))
-        if c is not None:
-            cond = cond | (F.col("total") == c)
-        rows = pc.filter(cond).select("a", "b", "total").collect()
-        ms = set(minted)
-        return (
-            {r["a"] for r in rows if r["total"] == c},
-            {s for r in rows for s in (r["a"], r["b"]) if s in ms},
-        )
-
-    return _disjoint_prefix(top, batch_max, remaining, probe)
+    return _disjoint_prefix(top, batch_max, remaining, earlier_mints)
 
 
-def induce_bpe_batched(
+def induce_bpe(
     docs: DataFrame,
     n_merges: int,
     text_col: str = "text",
     batch_max: int = 16,
 ) -> tuple[DataFrame, DataFrame]:
-    """Sequential-exact BPE induction with BATCHED rounds: each corpus
-    round merges up to ``batch_max`` pairwise-disjoint pairs at once
-    (see ``_disjoint_prefix`` for the proof sketch), so a realistic
-    30k-merge vocabulary needs hundreds of Spark rounds instead of
-    30k sequential jobs. Output is identical to sequential greedy BPE
-    (``batch_max=1``, i.e. ``induce_bpe``) — same merge table (steps,
-    counts, order), same final segmentation — which is what lets this
-    share the sequential oracle.
+    """Train ``n_merges`` BPE merges on the corpus. Returns
+    ``(merges, words)``:
+
+    - merges: (step, pair_left, pair_right, merged, pair_count) — the
+      ordered merge table, the tokenizer artifact;
+    - words: (token, cnt, s) — the final vocabulary segmentation under
+      those merges (bracket rendering).
+
+    Stops early (fewer rows in ``merges``) if the vocabulary runs out
+    of adjacent pairs — single-character words can exhaust a toy corpus
+    before ``n_merges`` rounds.
+
+    Each corpus round merges up to ``batch_max`` pairwise-disjoint
+    pairs at once (see ``_disjoint_prefix`` for the proof sketch), so a
+    realistic 30k-merge vocabulary needs hundreds of Spark rounds
+    instead of 30k sequential jobs. Output is identical to sequential
+    greedy BPE — ``batch_max=1``, one merge per round, the reference
+    the tests compare against — same merge table (steps, counts,
+    order), same final segmentation.
 
     Driver boundary: ONE bounded collect of <= batch_max + 1 tiny
     (a, b, total) rows per round — the same metadata-only discipline as
@@ -323,20 +296,20 @@ def induce_bpe_batched(
         raise ValueError(f"batch_max must be >= 1, got {batch_max}")
     spark = docs.sparkSession
     words = _vocab(docs, text_col).localCheckpoint(eager=True)
-    # Round-16 job-count discipline (the r16 profile charged bpe_merges
-    # 45 driver jobs for 0.7 task-seconds — pure orchestration): ONE job
-    # per round. The batch comes back as a bounded collect, the rewrite
-    # folds into the NEXT round's plan as a lazy literal-replace chain
-    # instead of its own crossJoin + checkpoint job, and the merge table
-    # materializes once from driver literals at the end. A checkpoint
-    # every _CKPT_REPLACES chained replaces keeps per-round analysis and
-    # recompute bounded whatever the batch sizes.
+    # ONE action per round: the batch comes back as a bounded collect,
+    # the rewrite folds into the NEXT round's plan as a lazy
+    # literal-replace chain instead of its own crossJoin + checkpoint
+    # job, and the merge table materializes once from driver literals
+    # at the end. A checkpoint every _CKPT_REPLACES chained replaces
+    # keeps per-round analysis and recompute bounded whatever the batch
+    # sizes.
     _CKPT_REPLACES = 64
     merge_lits: list[tuple] = []
+    mints: set[str] = set()
     since_ckpt = 0
     while len(merge_lits) < n_merges:
         batch = select_batch(
-            _pair_counts(words), batch_max, n_merges - len(merge_lits)
+            _pair_counts(words), batch_max, n_merges - len(merge_lits), mints
         )
         if not batch:
             break
@@ -344,6 +317,7 @@ def induce_bpe_batched(
             merge_lits.append(
                 (len(merge_lits) + 1, r["a"], r["b"], r["a"] + r["b"], r["total"])
             )
+            mints.add(r["a"] + r["b"])
         s = F.col("s")
         for r in batch:
             s = F.replace(
@@ -373,9 +347,9 @@ def encode_corpus(
 ) -> DataFrame:
     """APPLY a trained tokenizer to the corpus — the serve half of the
     BPE train/apply split: the final vocabulary segmentation table
-    (token -> bracket rendering, as returned by ``induce_bpe`` /
-    ``induce_bpe_batched``) is broadcast, and tokenization is one
-    vocabulary equi join — the corpus never replays a merge. Returns
+    (token -> bracket rendering, as returned by ``induce_bpe``) is
+    broadcast, and tokenization is one vocabulary equi join — the
+    corpus never replays a merge. Returns
     the per-doc tokenizer report: (doc_id, n_tokens, n_symbols,
     n_chars, compression) where compression = chars per emitted BPE
     symbol (the fertility metric tokenizer evaluations track).

@@ -26,6 +26,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 from timeseries_spark.functions.inline import inline_rows
+from timeseries_spark.functions.sqlexpr import lit_double
 
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
@@ -90,7 +91,7 @@ def logreg_fit(
     z = " + ".join(["w_bias"] + [f"(w_{c} * `{c}`)" for c in feats])
     p = f"(1.0D / (1.0D + exp(-({z}))))"
     resid = f"(`{label_col}` - {p})"
-    lr_lit = f"CAST('{float(lr)!r}' AS DOUBLE)"
+    lr_lit = lit_double(lr)
     any_null = " OR ".join(
         f"`{c}` IS NULL" for c in [label_col, *feats]
     )

@@ -31,6 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from timeseries_spark.functions.sqlexpr import lit_double
 from timeseries_spark.functions.vectors import checked_dims
 
 # Knuth multiplicative constant; mixes the (component, output-dim) pair
@@ -351,7 +352,7 @@ def pca_top_components(
     # (the driver hung in ArrayAggregate.eval). The per-step projection
     # structure below is load-bearing: every step is referenced at
     # least twice, so CollapseProject keeps it materialized per row.
-    start_lit = f"CAST('{1.0 / float(dims) ** 0.5!r}' AS DOUBLE)"
+    start_lit = lit_double(1.0 / float(dims) ** 0.5)
     fold_sql = "aggregate({arr}, 0.0D, (acc, t) -> acc + t)"
     snap_sql = "CAST(floor({x} * 1E10 + 0.5D) AS DOUBLE) / 1E10"
     df = mrow

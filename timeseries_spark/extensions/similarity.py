@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from timeseries_spark.functions.parallelism import ensure_parallelism
+from timeseries_spark.functions.sqlexpr import lit_double
 from timeseries_spark.functions.vectors import (
     cosine_from_norms,
     cosine_similarity,
@@ -388,7 +389,7 @@ def hyperplane_bucket(vec_sql: str, planes: list[list[float]]) -> F.Column:
     only thing the bucket depends on — is bit-identical across engines."""
     terms = []
     for p, row in enumerate(planes):
-        arr = "array(" + ",".join(f"{x}D" for x in row) + ")"
+        arr = "array(" + ",".join(lit_double(x) for x in row) + ")"
         dot = (
             f"aggregate(zip_with({vec_sql}, {arr}, (x, y) -> x * y), "
             "cast(0.0 as double), (acc, v) -> acc + v)"
@@ -770,8 +771,8 @@ def mmr_rerank(
     # 1:1 transliteration: same binds, same fold seeds, same tie-break
     # comparisons, same literals (string-cast doubles round-trip repr
     # exactly), so the analyzed plan and every double are unchanged.
-    lam_lit = f"CAST('{float(lam)!r}' AS DOUBLE)"
-    inv_lit = f"CAST('{1.0 - float(lam)!r}' AS DOUBLE)"
+    lam_lit = lit_double(lam)
+    inv_lit = lit_double(1.0 - float(lam))
 
     def bind(value: str, var: str, body: str) -> str:
         """SQL spelling of the single-element transform binding:

@@ -10,14 +10,17 @@ pure worker-round-trip wait per job (32 tasks × ~10 ms-0.3 s, near-zero
 CPU) — a flat tax on every query that joins against a local list, paid
 once per broadcast build.
 
-``inline_rows`` embeds the rows as literal structs exploded by
-``inline()`` over a ONE-split range: the table evaluates entirely in
-the JVM (one tiny task, no Python boundary), with values identical to
-the createDataFrame path — ``lit().cast(field_type)`` performs the same
-typed conversion, and NULLs become typed nulls. Intended for
-vocab-grain tables (query terms, source registries, weight maps,
-rank/mapping tables); anything corpus-sized should arrive as a real
-distributed source instead.
+``inline_rows`` renders the rows as ONE SQL expression,
+``inline(array(named_struct(...), ...))``, over a ONE-split range: the
+table evaluates entirely in the JVM (one tiny task, no Python boundary)
+and is built in a constant number of py4j calls whatever the row count
+(a ``F.lit``/``F.struct`` tree paid about 33 calls per cell). Values
+are identical to the createDataFrame path — each cell is
+``functions/sqlexpr.py:lit_sql``, ``CAST(<literal> AS <field type>)``,
+the same typed conversion ``lit().cast()`` performs, and NULLs become
+typed nulls. Intended for vocab-grain tables (query terms, source
+registries, weight maps, rank/mapping tables); anything corpus-sized
+should arrive as a real distributed source instead.
 """
 
 from __future__ import annotations
@@ -25,8 +28,9 @@ from __future__ import annotations
 from collections.abc import Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from timeseries_spark.functions.sqlexpr import lit_sql, lit_string
 
 
 def inline_rows(
@@ -35,9 +39,10 @@ def inline_rows(
     schema: str | StructType,
 ) -> DataFrame:
     """A DataFrame over ``rows`` (sequences matching ``schema``'s field
-    order) that plans as literals + ``inline()`` — no PythonRDD, no
-    Python workers at any materialization. Empty ``rows`` falls back to
-    an empty local relation (cold path, no runtime tasks either)."""
+    order) that plans as one literal ``inline()`` expression — no
+    PythonRDD, no Python workers at any materialization. Empty ``rows``
+    falls back to an empty local relation (cold path, no runtime tasks
+    either). A value with no SQL literal form raises ``TypeError``."""
     st = (
         StructType.fromDDL(schema) if isinstance(schema, str) else schema
     )
@@ -53,13 +58,13 @@ def inline_rows(
                 f"inline_rows: row {i} has {len(r)} values for "
                 f"{len(st.fields)} schema fields"
             )
-    structs = [
-        F.struct(
-            *[
-                F.lit(v).cast(f.dataType).alias(f.name)
-                for v, f in zip(r, st.fields)
-            ]
+    structs = ", ".join(
+        "named_struct("
+        + ", ".join(
+            f"{lit_string(f.name)}, {lit_sql(v, f.dataType)}"
+            for v, f in zip(r, st.fields)
         )
+        + ")"
         for r in rows
-    ]
-    return spark.range(0, 1, 1, 1).select(F.inline(F.array(*structs)))
+    )
+    return spark.range(0, 1, 1, 1).selectExpr(f"inline(array({structs}))")

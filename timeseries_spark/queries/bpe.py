@@ -75,9 +75,11 @@ def bpe_merges(spark, sf_dir):
     ordered merge table (step, pair_left, pair_right, merged,
     pair_count) — tokenizer training as an engine operator. Corpus
     scanned once into a (token, count) vocabulary; every round after is
-    vocabulary-grain: one pair-count shuffle with map-side combine, a
-    one-row TakeOrdered argmax broadcast back, a per-row string-replace
-    rewrite (extensions/bpe.py:induce_bpe)."""
+    vocabulary-grain: one pair-count shuffle with map-side combine, ONE
+    bounded TakeOrdered collect of the top 17 pairs from which the
+    driver validates an exact batch of up to 16 disjoint merges, and a
+    per-row string-replace rewrite folded into the next round
+    (extensions/bpe.py:induce_bpe)."""
     docs = load(spark, sf_dir, "documents")
     merges, _ = induce_bpe(docs, n_merges=N_MERGES)
     return merges
@@ -95,18 +97,17 @@ def bpe_segmentation(spark, sf_dir):
 
 @query("bpe_merges_batched", oracle=_MERGES_ORACLE)
 def bpe_merges_batched(spark, sf_dir):
-    """The SAME 8 merges as bpe_merges, induced with batched rounds:
-    each corpus round merges the longest strict-boundary disjoint
-    PREFIX of the pair ranking (up to 16 at once), which is provably
-    identical to sequential greedy BPE merge-for-merge
-    (extensions/bpe.py:_disjoint_prefix). Sharing bpe_merges' oracle
-    IS the claim: a 30k-merge production vocabulary trains in
-    ~hundreds of rounds instead of 30k sequential Spark jobs, with a
-    bit-identical merge table."""
-    from timeseries_spark.extensions.bpe import induce_bpe_batched
-
+    """The SAME 8 merges as bpe_merges, at the same batch width, stated
+    explicitly: each corpus round merges the longest exact disjoint
+    PREFIX of the pair ranking (up to ``batch_max=16`` at once), which
+    is provably identical to sequential greedy BPE merge-for-merge
+    (extensions/bpe.py:_disjoint_prefix). Sharing bpe_merges' oracle —
+    the sequential DuckDB replay, one merge per CTE stage — IS the
+    claim: a 30k-merge production vocabulary trains in ~hundreds of
+    rounds instead of 30k sequential Spark jobs, with a bit-identical
+    merge table."""
     docs = load(spark, sf_dir, "documents")
-    merges, _ = induce_bpe_batched(docs, n_merges=N_MERGES, batch_max=16)
+    merges, _ = induce_bpe(docs, n_merges=N_MERGES, batch_max=16)
     return merges
 
 
@@ -139,11 +140,11 @@ def bpe_encode_corpus(spark, sf_dir):
     segmentation broadcasts and tokenization is ONE vocabulary equi
     join per corpus token (the corpus never replays merges). Per-doc
     report: token/symbol/char counts + compression (chars per BPE
-    symbol, the fertility metric). Training uses the batched inducer,
-    whose output is provably identical to sequential BPE
+    symbol, the fertility metric). Training uses batched rounds, whose
+    output is provably identical to sequential BPE
     (extensions/bpe.py:encode_corpus)."""
-    from timeseries_spark.extensions.bpe import encode_corpus, induce_bpe_batched
+    from timeseries_spark.extensions.bpe import encode_corpus
 
     docs = load(spark, sf_dir, "documents")
-    _, words = induce_bpe_batched(docs, n_merges=N_MERGES, batch_max=16)
+    _, words = induce_bpe(docs, n_merges=N_MERGES)
     return encode_corpus(docs, words)

@@ -1,5 +1,5 @@
 """BPE induction at production vocabulary depth (round-11 verdict
-item 6): drive ``induce_bpe_batched`` to a 2-4k-merge vocabulary at
+item 6): drive ``induce_bpe`` to a 2-4k-merge vocabulary at
 sf0.1 and record what the per-round collect discipline actually costs
 at depth — corpus rounds taken, wall time, merges landed per round,
 and the vocab-grain state size (distinct word types and total
@@ -104,23 +104,27 @@ def main() -> None:
             .localCheckpoint(eager=True)
         )
 
-    # the induce_bpe_batched loop, instrumented per round (same code
-    # path: _vocab -> [_pair_counts -> top -> disjoint prefix -> chained
-    # replace -> checkpoint]*; extensions/bpe.py:induce_bpe_batched)
+    # the induce_bpe loop, instrumented per round (same code path:
+    # _vocab -> [_pair_counts -> top -> disjoint prefix -> chained
+    # replace -> checkpoint]*; extensions/bpe.py:induce_bpe)
     t_start = time.perf_counter()
     words = _vocab(docs, "text").localCheckpoint(eager=True)
     vocab_rows = words.count()
     t_vocab = time.perf_counter() - t_start
 
     rounds: list[dict] = []
+    mints: set[str] = set()
     n_done = 0
     while n_done < n_merges:
         t0 = time.perf_counter()
         # select_batch floors at 1 (plain greedy), so the loop
         # always advances while pairs remain
-        batch = select_batch(_pair_counts(words), batch_max, n_merges - n_done)
+        batch = select_batch(
+            _pair_counts(words), batch_max, n_merges - n_done, mints
+        )
         if not batch:
             break
+        mints.update(r["a"] + r["b"] for r in batch)
         s = F.col("s")
         for r in batch:
             s = F.replace(

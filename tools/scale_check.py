@@ -320,33 +320,24 @@ def main() -> None:
     # BPE induction: corpus grows Nx with a CONSTANT vocabulary (plain
     # replication, unprefixed text) — after the one corpus scan into the
     # (token, count) table, every merge round is vocabulary-grain, so
-    # wall should stay nearly FLAT as the corpus grows.
+    # wall should stay nearly FLAT as the corpus grows. Both the
+    # sequential reference (batch_max=1) and the default batched rounds
+    # are timed: disjoint-prefix batching merges many pairs per corpus
+    # pass, so the batched Nx ratio AND absolute time should both beat
+    # sequential induction.
     from timeseries_spark.extensions.bpe import induce_bpe
 
-    def bpe(d):
-        return lambda: induce_bpe(d, n_merges=4)[0].count()
+    for name, bm in (("bpe_merges", 1), ("bpe_merges_batched", 16)):
 
-    t1 = time_warm(bpe(d1))
-    tN = time_warm(bpe(dN))
-    print(json.dumps({
-        "name": "bpe_merges", "sf": sf_dir, "n_rep": n_rep,
-        "t1": t1, "tN": tN, "ratio": round(tN / max(t1, 1e-3), 2),
-    }))
+        def bpe(d, bm=bm):
+            return lambda: induce_bpe(d, n_merges=4, batch_max=bm)[0].count()
 
-    # batched BPE on the same Nx corpus: rounds collapse (disjoint-prefix
-    # batching merges many pairs per corpus pass), so the Nx ratio AND
-    # the absolute time should both beat sequential induction.
-    from timeseries_spark.extensions.bpe import induce_bpe_batched
-
-    def bpeb(d):
-        return lambda: induce_bpe_batched(d, n_merges=4, batch_max=16)[0].count()
-
-    t1 = time_warm(bpeb(d1))
-    tN = time_warm(bpeb(dN))
-    print(json.dumps({
-        "name": "bpe_merges_batched", "sf": sf_dir, "n_rep": n_rep,
-        "t1": t1, "tN": tN, "ratio": round(tN / max(t1, 1e-3), 2),
-    }))
+        t1 = time_warm(bpe(d1))
+        tN = time_warm(bpe(dN))
+        print(json.dumps({
+            "name": name, "sf": sf_dir, "n_rep": n_rep,
+            "t1": t1, "tN": tN, "ratio": round(tN / max(t1, 1e-3), 2),
+        }))
 
     # staged-quantizer IVF probe: the Nx corpus is quantized by
     # broadcast argmin against PRE-STAGED centroids (fit off the clock,
