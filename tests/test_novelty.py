@@ -72,7 +72,7 @@ def test_undated_bucket_has_zero_or_positive_novelty(with_novelty):
 @pytest.mark.parametrize("field", ["novelty_scale", "novelty_shift"])
 @pytest.mark.parametrize("value", [float("nan"), float("inf"), float("-inf")])
 def test_config_rejects_non_finite_novelty_params(field, value):
-    # both are spliced into the novelty SQL as `{x!r}D`: nanD / infD
-    # would only fail later, inside Spark's parser
+    # a non-finite decay parameter would make every novelty NaN or a
+    # silent 0, so the config rejects it up front
     with pytest.raises(ValueError, match=field):
         EngineConfig(**{field: value})

@@ -199,3 +199,22 @@ def test_point_query_rows_render_end_to_end(staged, disease, spark, tmp_path):
     assert d["width"] == 1 + (max(years) - min(years) + 1) * 9
     with pytest.raises(ValueError, match="no rows"):
         render_timeline_ppm(undated)
+
+
+def test_read_back_schema_equals_inferred(
+    staged, spark, evidence_dated, disease, cfg, tmp_path
+):
+    """Each stage is read back with the schema it was just written with
+    (no footer-inference job); that schema must be the one inference
+    gives: names, order, types and nullability, for the partitioned
+    ``sourceId`` stages and the indirect evidence stage too."""
+    tables, out = staged
+    indirect = TimeseriesPipeline(cfg, out_dir=str(tmp_path)).indirect_evidence(
+        evidence_dated, disease
+    )
+    supplied = {name: df.schema for name, df in tables.items()}
+    supplied["evidence_dated_indirect"] = indirect.schema
+    assert len(supplied) == 5
+    for name, schema in supplied.items():
+        root = tmp_path if name == "evidence_dated_indirect" else out
+        assert schema == spark.read.parquet(f"{root}/{name}").schema, name

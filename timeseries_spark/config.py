@@ -83,8 +83,8 @@ class EngineConfig:
     datasources: tuple[DataSource, ...] = field(default=DATA_SOURCES)
 
     def __post_init__(self) -> None:
-        # both are spliced into the novelty SQL as ``{x!r}D``; NaN/inf
-        # render as ``nanD``/``infD``, which Spark cannot resolve
+        # a NaN/inf decay parameter makes the novelty values NaN or a
+        # degenerate step; reject it here, not deep inside a plan
         for name in ("novelty_scale", "novelty_shift"):
             value = getattr(self, name)
             if not math.isfinite(value):

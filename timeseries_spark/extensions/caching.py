@@ -54,6 +54,7 @@ import weakref
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.storagelevel import StorageLevel
 
 _LOCK = threading.Lock()
 # weakref.ref(session) -> family -> [(weakref.ref(df), jdf handle)].
@@ -89,8 +90,10 @@ def _on_session_collected(ref: weakref.ref) -> None:
 
 def register_cache(df: DataFrame, family: str) -> DataFrame:
     """Persist ``df`` and record it under (owning session, ``family``)
-    so a later :func:`release_caches` can free the block."""
-    out = df.persist()
+    so a later :func:`release_caches` can free the block. A plan that
+    is already cached (say, by an earlier build of the same query) is
+    not persisted again; its handle is still recorded."""
+    out = df.persist() if df.storageLevel == StorageLevel.NONE else df
     sess = out.sparkSession
     jdf = getattr(out, "_jdf", None)
     handle: Any = out if jdf is None else jdf

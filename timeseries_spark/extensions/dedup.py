@@ -29,6 +29,7 @@ from timeseries_spark.functions.parallelism import (
     bytes_sized_shuffles,
     ensure_parallelism,
 )
+from timeseries_spark.session import phase
 
 # Multi-consumer persist() points registered by the pair generators
 # (posting/signature/band blocks) go through the shared, per-session,
@@ -677,11 +678,9 @@ def connected_components(
     # job descriptions label each materialization for the Spark UI and
     # the per-phase profiler (tools/profiler.py); the first one also
     # executes the upstream pair subtree (block cosine + edge build).
-    # The caller's own label is restored on exit, so its later jobs
-    # keep it.
-    sc = pairs.sparkSession.sparkContext
-    outer_label = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription("cc: seed labels (runs pair subtree)")
+    # phase() restores the caller's own label on exit, so its later
+    # jobs keep it.
+    spark = pairs.sparkSession
     # the seed ABSORBS round 0's neighbor-min hop: instead of seeding
     # label = vid (one distinct shuffle) and spending a full loop round
     # on the first hop, seed label = min(vid, min neighbor) in the same
@@ -699,7 +698,10 @@ def connected_components(
     # task time); the one compute-dense stage inside the seed job (the
     # block-cosine pair kernel) sits behind REPARTITION_BY_NUM
     # exchanges, which AQE never coalesces
-    with bytes_sized_shuffles(pairs.sparkSession):
+    with (
+        phase(spark, "cc: seed labels (runs pair subtree)"),
+        bytes_sized_shuffles(spark),
+    ):
         # the persist happens INSIDE the scope: the cached-plan AQE flag
         # (canChangeCachedPlanOutputPartitioning) is consulted when the
         # cache ENTRY is created, so the edge cache stores at its
@@ -769,29 +771,29 @@ def connected_components(
                 )
                 # pointer jump: adopt the label of one's label — squares the
                 # propagation distance per round
-                sc.setJobDescription(f"cc: round {_round} hop+jump")
                 round_obs = Observation()
-                updated = (
-                    hopped.alias("h")
-                    .join(
-                        hopped.select(
-                            F.col("vid").alias("label"), F.col("label").alias("ll")
-                        ).alias("l2"),
-                        "label",
-                        "left",
+                with phase(spark, f"cc: round {_round} hop+jump"):
+                    updated = (
+                        hopped.alias("h")
+                        .join(
+                            hopped.select(
+                                F.col("vid").alias("label"), F.col("label").alias("ll")
+                            ).alias("l2"),
+                            "label",
+                            "left",
+                        )
+                        .select(
+                            "vid",
+                            F.least(
+                                F.col("label"), F.coalesce(F.col("ll"), F.col("label"))
+                            ).alias("label"),
+                        )
+                        .observe(
+                            round_obs,
+                            F.sum(F.col("label").cast("decimal(38,0)")).alias("s"),
+                        )
+                        .localCheckpoint()
                     )
-                    .select(
-                        "vid",
-                        F.least(
-                            F.col("label"), F.coalesce(F.col("ll"), F.col("label"))
-                        ).alias("label"),
-                    )
-                    .observe(
-                        round_obs,
-                        F.sum(F.col("label").cast("decimal(38,0)")).alias("s"),
-                    )
-                    .localCheckpoint()
-                )
                 cur_sum = round_obs.get["s"]
                 labels = updated
                 if cur_sum == prev_sum:
@@ -811,7 +813,6 @@ def connected_components(
             ).select(id_col, F.col(id_col).alias("component"))
             return paired.unionByName(singletons)
         finally:
-            sc.setJobDescription(outer_label)
             edges.unpersist()
 
 
@@ -891,15 +892,10 @@ def semantic_dedup(
         # re-deriving the argmin per branch was measurably slower than
         # the in-plan path it replaces (kmeans_assign checkpoints its
         # assignments as a side effect of the Lloyd loop).
-        sc = vectors.sparkSession.sparkContext
-        outer_label = sc.getLocalProperty("spark.job.description")
-        sc.setJobDescription("semantic: staged-centroid assign")
-        try:
+        with phase(vectors.sparkSession, "semantic: staged-centroid assign"):
             clusters = assign_to_centroids(
                 vectors, centroids, id_col=id_col, vec_col=vec_col
             ).localCheckpoint(eager=True)
-        finally:
-            sc.setJobDescription(outer_label)
     else:
         if n_clusters == "auto":
             # corpus-sized blocker: one count() action (a distributed

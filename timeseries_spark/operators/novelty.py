@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from timeseries_spark.config import EngineConfig
+from timeseries_spark.functions.sqlexpr import lit_double
 
 
 def _peaks(series_col: str) -> Column:
@@ -72,8 +73,8 @@ def _novelty_at(year_expr: str, peaks_expr: str, cfg: EngineConfig) -> Column:
         round(coalesce(array_max(transform(
           filter({p}, q -> {y} - q.py >= 0
                        AND {y} - q.py <= {cfg.novelty_window}),
-          q -> q.pk / (1 + exp({cfg.novelty_scale!r}D
-                               * ({y} - q.py - {cfg.novelty_shift!r}D))))),
+          q -> q.pk / (1 + exp({lit_double(cfg.novelty_scale)}
+                               * ({y} - q.py - {lit_double(cfg.novelty_shift)}))))),
         0D), 3)
         """
     )

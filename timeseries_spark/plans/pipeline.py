@@ -22,6 +22,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from timeseries_spark.config import EngineConfig
 from timeseries_spark.operators.novelty import add_novelty
@@ -31,6 +32,18 @@ from timeseries_spark.sources.io import table_exists, write_parquet
 
 DS_KEYS = ("diseaseId", "targetId", "datasourceId")
 OVERALL_KEYS = ("diseaseId", "targetId")
+
+
+def _written_schema(schema: StructType, partition_by: str | None) -> StructType:
+    """The schema a parquet read infers for ``schema`` written with
+    ``partition_by``: the writer makes every column nullable, and the
+    partition column comes back last."""
+    parts = [partition_by] if partition_by else []
+    fields = [f for f in schema.fields if f.name not in parts]
+    fields += [schema[p] for p in parts]
+    return StructType(
+        [StructField(f.name, f.dataType, True, f.metadata) for f in fields]
+    )
 
 
 @dataclass
@@ -49,9 +62,14 @@ class TimeseriesPipeline:
             return df
         path = f"{self.out_dir}/{name}"
         spark = df.sparkSession
-        if not table_exists(spark, path):  # correct skip-if-exists (S9 fix)
-            write_parquet(df, path, partition_by=partition_by)
-        return spark.read.parquet(path)
+        if table_exists(spark, path):  # correct skip-if-exists (S9 fix)
+            return spark.read.parquet(path)
+        write_parquet(df, path, partition_by=partition_by)
+        # read back with the schema just written: inferring it would run
+        # a footer-reading job per stage
+        return spark.read.schema(_written_schema(df.schema, partition_by)).parquet(
+            path
+        )
 
     def indirect_evidence(self, evidence_dated: DataFrame, disease: DataFrame) -> DataFrame:
         """Ontology expansion (timeseries.py:339-366)."""

@@ -85,8 +85,8 @@ def _lr_oracle(n_iter: int, lr: float) -> str:
 def logreg_quality_train(spark, sf_dir):
     """Four full-batch GD rounds (lr = 5) of logistic regression on
     (stopword_ratio, punct_ratio, mean_word_len/10) vs lang == 'en':
-    each round is one map-side-combined gradient aggregation with the
-    one-row weight vector broadcast back — training data never leaves
+    each round is one observed pass over the cached features that
+    returns only the gradient averages — training data never leaves
     the cluster. Output: learned weights + accuracy + log-loss."""
     docs = load(spark, sf_dir, "documents")
     feats = quality_metrics(docs, "text").select(

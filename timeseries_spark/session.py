@@ -10,6 +10,8 @@ timeseries.py:454 — see SURVEY.md §4).
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -61,3 +63,18 @@ def explain(df: DataFrame) -> str:
     return df.sparkSession._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
+
+
+@contextmanager
+def phase(spark: SparkSession, label: str) -> Iterator[None]:
+    """Run the block's jobs under job description ``label``, then give
+    the caller's description back, also when the block raises. Phases
+    nest: an inner phase restores the outer label, so an operator never
+    wipes its caller's. The profiler groups jobs by this label."""
+    sc = spark.sparkContext
+    outer = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(outer)
